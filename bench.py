@@ -458,7 +458,7 @@ def main() -> None:
     # merges (every posting group is touched by any increment, and a 10%
     # increment touches 76-94% of posting MASS even on realistic
     # vocabularies — head terms hold the mass and are always hit; see
-    # BASELINE.md). The fix is the monotone doc_id mode: merges become
+    # BASELINE.md). Batch-monotone doc ids make merges
     # block-boundary TAIL-APPENDS (codec.append_posting_blob) — the old
     # bulk is a header-adjusted memcpy, work is increment-proportional.
     # Measured here on a 2M-term Zipf vocabulary (most terms df<10, like a
@@ -501,7 +501,6 @@ def main() -> None:
             num_buckets=int(CPUS), shuffle_partitions=int(CPUS),
             files_max_partition_bytes=8 * 1024 * 1024,
             files_open_cost_bytes=8 * 1024 * 1024,
-            doc_id_mode="monotone",
         )
         work = tempfile.mkdtemp(prefix="bench_zipf_")
         idx = os.path.join(work, "index")
@@ -529,7 +528,6 @@ def main() -> None:
             "base_docs": base,
             "incoming_docs": n_new,
             "vocab": "zipf-tail 2M terms, s=1.1",
-            "doc_id_mode": "monotone",
             "ingest_sec": round(t1 - t0, 3),
             "compact_sec": round(t2 - t1, 3),
             "compact_stage_sec": out["stage_sec"],

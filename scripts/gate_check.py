@@ -94,22 +94,26 @@ def main() -> None:
             # by summation ORDER alone (1 ulp ~ 1e-7 absolute > the rounding
             # grain). Distinguish real value bugs from ulp noise with a
             # relative-tolerance re-check so insurance runs at sf0.1 don't
-            # cry wolf: floats equal within rtol 1e-9 count as FLOAT-ULP.
-            ulp_only = False
-            if ok_schema and ok_rows and not ok_vals:
-                def _close(a, b):
-                    if isinstance(a, float) and isinstance(b, float):
-                        return abs(a - b) <= 1e-9 * max(1.0, abs(a), abs(b))
-                    return a == b
-                ulp_only = all(
-                    all(_close(x, y) for x, y in zip(sr, orow))
-                    for sr, orow in zip(srows, orows)
-                )
+            # cry wolf: floats equal within rtol 1e-12 (~1e-3 absolute on a
+            # 1e9 sum, a few thousand ulps) count as FLOAT-ULP, and the raw
+            # max abs/rel diff is printed so the noise stays visible.
+            diffs = ok_schema and ok_rows and not ok_vals
+            pairs = [(x, y) for sr, orow in zip(srows, orows)
+                     for x, y in zip(sr, orow)] if diffs else []
+            fl = [(abs(x - y), max(1.0, abs(x), abs(y))) for x, y in pairs
+                  if isinstance(x, float) and isinstance(y, float)]
+            max_abs = max((d for d, _ in fl), default=0.0)
+            max_rel = max((d / m for d, m in fl), default=0.0)
+            ulp_only = diffs and max_rel <= 1e-12 and all(
+                x == y for x, y in pairs
+                if not (isinstance(x, float) and isinstance(y, float)))
             status = ("OK" if (ok_schema and ok_rows and ok_vals)
                       else "OK-FLOAT-ULP" if ulp_only else "FAIL")
             print(f"{name}: {status} spark={len(srows)} oracle={len(orows)} "
                   f"schema={'ok' if ok_schema else f'{cols} vs {ocols}'}"
-                  + ("" if ok_vals or ulp_only else " VALUES-DIFFER"))
+                  + ("" if ok_vals or ulp_only else " VALUES-DIFFER")
+                  + (f" max_abs_diff={max_abs:.3g} max_rel_diff={max_rel:.3g}"
+                     if diffs else ""))
             if status == "FAIL":
                 if not ok_vals and ok_schema and ok_rows:
                     diff = [

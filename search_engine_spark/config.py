@@ -32,31 +32,6 @@ class EngineConfig:
     #: postings-per-file cap (indexer.py:21,181-187).
     max_records_per_file: int = 4_000_000
 
-    #: doc_id assignment mode, stamped into the index manifest at build time:
-    #:
-    #: - ``"hash"`` (default, the reference-parity layout): doc_id =
-    #:   xxhash64(url). Content-addressed — the same url always maps to the
-    #:   same id, so re-crawls dedup by id — but new docs INTERLEAVE with old
-    #:   ones in every posting list, making incremental compaction work
-    #:   proportional to the posting MASS of the touched (bucket, term)
-    #:   groups (a hot term's whole list decodes+re-encodes when any new doc
-    #:   contains it; measured: a 10% increment touches 76-94% of posting
-    #:   mass even on a Zipf-tailed 2M-term vocabulary, because head terms
-    #:   hold the mass and are always touched).
-    #: - ``"monotone"``: doc_id = batch_base + monotonically-increasing id,
-    #:   where batch_base strictly exceeds every id of every earlier batch.
-    #:   Every incremental merge becomes a TAIL-APPEND: untouched groups
-    #:   pass through byte-identical as before, and touched multi-block
-    #:   groups splice at a block boundary (decode only the old final
-    #:   partial block; the old bulk is a header-adjusted memcpy) — work is
-    #:   increment-proportional. Ranking is unaffected: the tie-break is
-    #:   (score, warc_ts, url), never doc_id (reference ranker.py:51-63 ties
-    #:   on date, not id). Re-crawl dedup switches from id to url equality.
-    #:   Envelope: < 2^15 batches per index and < 2^48 monotone ids per
-    #:   batch (32k input partitions x 8.6B rows — ~4 TB per ingest batch at
-    #:   128 MB splits); exceeding either raises at assignment time.
-    doc_id_mode: str = "hash"
-
     # --- text processing ----------------------------------------------------
     #: apply stemming (reference stemmer.py; ConfigClass.toStem
     #: configuration.py:16). Default off, like the reference's main.py.

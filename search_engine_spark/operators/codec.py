@@ -239,7 +239,7 @@ def append_posting_blob(
 ) -> tuple[bytes, np.ndarray, np.ndarray]:
     """Tail-append new postings to an encoded blob WITHOUT decoding its bulk.
 
-    Precondition (monotone doc_id mode, EngineConfig.doc_id_mode): every
+    Precondition (batch-monotone doc ids, parse.assign_doc_ids): every
     ``new_ids`` value exceeds the blob's last doc id — asserted against
     ``old_block_last[-1]``. Because every block restarts with an absolute
     first value, the old blob's full blocks are byte-reusable as-is: only

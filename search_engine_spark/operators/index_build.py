@@ -493,6 +493,24 @@ def _reconcile_resume_plan(
     return plan
 
 
+def next_parsed_slot(cat: CatalogAdapter) -> int:
+    """Doc-id slot of the next ``parsed`` batch (``parse.assign_doc_ids``):
+    the number of batches already committed, read just before the append.
+    The one rule for build, resume and compaction; unlike a plan position
+    it never repeats after a file-level resume regroups the plan."""
+    return len(cat.completed_batches("parsed"))
+
+
+def require_parsed_docs(cat: CatalogAdapter) -> None:
+    """Raise if ``parsed`` holds no document (per the manifest's batch row
+    counts): there is nothing to index or to fold into."""
+    if not any(e.get("rows") for e in cat.batch_entries("parsed")):
+        raise ValueError(
+            f"index {cat.root} has no parsed documents: every input page "
+            "cleaned to nothing. Build the index from pages that parse."
+        )
+
+
 def build_index(
     spark: SparkSession,
     pages: DataFrame,
@@ -535,19 +553,17 @@ def build_index(
             pages.schema,
         )
         done = set(cat.completed_batches("parsed"))
-        # batch_seq is the POSITIONAL index in the (deterministic) plan, so
-        # a resumed monotone-mode build re-assigns the same id ranges to the
-        # same batches it would have gotten in one pass
-        for batch_seq, (batch_id, subset, lineage) in enumerate(plan):
+        for batch_id, subset, lineage in plan:
             if batch_id in done:
                 continue
             if scan_par < target_par:
                 subset = subset.repartition(target_par)
             cat.append_batch(
-                parse_corpus(subset, cfg, batch_seq=batch_seq),
+                parse_corpus(subset, cfg, slot=next_parsed_slot(cat)),
                 "parsed", batch_id, metrics=lineage,
             )
         cat.finalize_batched_table("parsed")
+    require_parsed_docs(cat)
     # Read-side parallelism for the staged table comes from split sizing
     # (EngineConfig.files_max_partition_bytes / files_open_cost_bytes):
     # a repartition here would re-shuffle the full parsed relation in every
@@ -713,7 +729,8 @@ def derive_index_tables(
             "glove_path": cfg.glove_path,
             "glove_dim": cfg.glove_dim,
             "num_buckets": cfg.num_buckets,
-            "doc_id_mode": cfg.doc_id_mode,
+            # compaction refuses an index without it (url-hash ids)
+            "doc_id_mode": "monotone",
         })
     else:
         _check_config_vs_properties(cfg, props)
@@ -751,32 +768,24 @@ def merge_derive_tables(
       batch is computed (glove vectors included).
     - ``postings`` — the (bucket, term) groups that gained no new docs
       pass through BYTE-IDENTICAL (no decode, no shuffle: a broadcastable
-      anti-join against the fresh group keys); groups present on both
-      sides decode-merge-re-encode; fresh-only groups come straight from
-      the streaming encoder. Correctness under the avg_dl drift this
-      implies: ``block_max`` is a function of the avg_dl at ENCODE time,
-      and the tf-side BM25 factor grows with avg_dl by at most the ratio
-      of the avg_dls, so every row carries ``enc_avgdl`` and the query
-      loader scales the bounds by max(1, avg_dl_now/enc_avgdl)
-      (operators/search.py) — bounds stay upper bounds, WAND stays exact,
-      and untouched rows never need re-encoding.
-    - ``term_stats`` — global df re-aggregates from the merged postings
-      (|vocab|·buckets rows, cheap); the vocabulary quirk fold (capitals
-      AND, entity counts) still scans the full parsed relation — the one
-      remaining full-corpus pass, documented as such.
+      anti-join against the fresh group keys); fresh-only groups come
+      straight from the streaming encoder; groups on both sides append the
+      fresh postings, since batch-monotone doc ids put every fresh id
+      above every old one (``_merge`` below holds the two kernels).
+      Correctness under the avg_dl drift this implies: ``block_max`` is a
+      function of the avg_dl at ENCODE time, and the tf-side BM25 factor
+      grows with avg_dl by at most the ratio of the avg_dls, so every row
+      carries ``enc_avgdl`` and the query loader scales the bounds by
+      max(1, avg_dl_now/enc_avgdl) (operators/search.py) — bounds stay
+      upper bounds, WAND stays exact, and untouched rows never need
+      re-encoding.
+    - ``term_stats`` — df re-aggregates from the merged postings (a
+      (term, local_df) column scan); the persisted vocabulary states
+      (``vocab_capitals`` AND, ``vocab_entities`` sum) fold in the fresh
+      batch, so the full parsed relation is never re-scanned.
 
-    Cost shape, honestly: decode+re-encode work is proportional to the
-    posting MASS of the touched groups, not the increment — a hot term's
-    whole list re-encodes when any new doc contains it (doc_id is an url
-    hash, so new ids interleave; a time-monotone doc_id would make every
-    merge a tail-append and the work increment-proportional, at the cost
-    of re-keying the engine's tie-breaks and parity tests). On the dense
-    synthetic vocabulary a 10% increment touches the groups holding most
-    of the mass (measured: 39% of groups, sf0.1), so wall-clock sits near
-    the full re-derive locally; on a Zipf-tailed web vocabulary (1e7-1e8
-    terms, most df<10) the untouched fraction — which passes through with
-    ZERO decode and no shuffle (broadcast anti-join) — dominates, and the
-    fold costs table IO plus the increment's mass.
+    Cost shape: untouched groups cost table IO only; touched groups cost
+    O(block_size + increment) each, however hot the term.
 
     All writes are atomic per table (catalog _tmp + rename); the caller
     commits the ``derived_from_batches`` staleness stamp after the last
@@ -901,24 +910,20 @@ def merge_derive_tables(
         ])
         block_size, k, b = cfg.block_size, cfg.bm25_k, cfg.bm25_b
         enc_avgdl = float(avg_dl)
-        monotone = cfg.doc_id_mode == "monotone"
 
         def _merge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            # Two merge kernels, routed per group:
+            # Two kernels, picked per group by the old list's block count:
             #
-            # - splice (monotone ids, multi-block old list): tail-append via
+            # - splice (multi-block old list): tail-append via
             #   codec.append_posting_blob — the old bulk is a header-adjusted
             #   memcpy, only its final partial block decodes; work is
-            #   O(block_size + increment) no matter how hot the term. This is
-            #   the path that makes compaction increment-proportional (hash
-            #   ids interleave, so they can never take it).
-            # - full re-encode (hash mode, or old fits in one block so a
-            #   splice would decode everything anyway): decode both sides,
-            #   merge-sort by doc_id, re-encode the WHOLE batch of groups in
-            #   one vectorized pass (_encode_group_batch — the same kernel
-            #   the build's streaming encoder uses, so merged blobs are
-            #   byte-identical to a from-scratch encode of the same
-            #   postings).
+            #   O(block_size + increment) no matter how hot the term.
+            # - re-encode (old list fits in one block, so a splice would
+            #   decode everything anyway): decode both sides, concatenate,
+            #   and re-encode the WHOLE batch of groups in one vectorized
+            #   pass (_encode_group_batch — the same kernel the build's
+            #   streaming encoder uses, so merged blobs are byte-identical
+            #   to a from-scratch encode of the same postings).
             from search_engine_spark.operators.codec import (
                 _encode_group_batch, append_posting_blob,
             )
@@ -926,22 +931,21 @@ def merge_derive_tables(
             for pdf in batches:
                 if not len(pdf):
                     continue
-                if monotone:
-                    multi = pdf["old_last"].map(len) > 1
-                    big, small = pdf[multi], pdf[~multi]
-                else:
-                    big, small = pdf.iloc[0:0], pdf
+                multi = pdf["old_last"].map(len) > 1
+                big, small = pdf[multi], pdf[~multi]
                 parts = []
                 if len(small):
                     g_ids, g_dls, g_tfs = [], [], []
                     for r in small.itertuples(index=False):
                         ids1, dl1, tf1 = decode_posting_list(bytes(r.old_blob))
                         ids2, dl2, tf2 = decode_posting_list(bytes(r.new_blob))
-                        ids = np.concatenate([ids1, ids2])
-                        order = np.argsort(ids, kind="stable")
-                        g_ids.append(ids[order])
-                        g_dls.append(np.concatenate([dl1, dl2])[order])
-                        g_tfs.append(np.concatenate([tf1, tf2])[order])
+                        if ids1[-1] >= ids2[0]:
+                            raise ValueError(
+                                f"posting merge: new doc id {int(ids2[0])} "
+                                f"<= old last id {int(ids1[-1])}")
+                        g_ids.append(np.concatenate([ids1, ids2]))
+                        g_dls.append(np.concatenate([dl1, dl2]))
+                        g_tfs.append(np.concatenate([tf1, tf2]))
                     lens = np.array([len(x) for x in g_ids], np.int64)
                     ends = np.cumsum(lens)
                     starts = ends - lens
@@ -1073,7 +1077,6 @@ def _check_config_vs_properties(cfg: EngineConfig, props: dict) -> None:
         ("glove_path", cfg.glove_path),
         ("glove_dim", cfg.glove_dim),
         ("num_buckets", cfg.num_buckets),
-        ("doc_id_mode", cfg.doc_id_mode),
     ):
         if key in props and props[key] != val:
             mismatches.append(f"{key}: index={props[key]!r} config={val!r}")
@@ -1106,5 +1109,4 @@ def config_from_properties(
         glove_path=props.get("glove_path", defaults.glove_path),
         glove_dim=int(props.get("glove_dim", defaults.glove_dim)),
         num_buckets=int(props.get("num_buckets", defaults.num_buckets)),
-        doc_id_mode=str(props.get("doc_id_mode", defaults.doc_id_mode)),
     )

@@ -92,70 +92,60 @@ def _parse_batches(stemming: bool):
                     [{"term": t, "cap": c} for t, c in doc.capitals.items()]
                 )
                 rows["entities"].append(sorted(doc.entities))
-            yield pd.DataFrame(rows)
+            if rows["url"]:  # an all-dropped batch has no column dtypes
+                yield pd.DataFrame(rows)
 
     return fn
 
 
-#: monotone doc_id layout: ids of batch k live in [k·2^48, (k+1)·2^48) —
-#: see EngineConfig.doc_id_mode
+#: doc_id layout: the ids of the batch in slot k live in [k·2^48, (k+1)·2^48)
 DOC_ID_BATCH_SHIFT = 48
 
 
-def assign_doc_ids(
-    parsed: DataFrame, cfg: EngineConfig, batch_seq: int = 0
-) -> DataFrame:
-    """Attach ``doc_id`` + ``bucket`` per the configured id mode.
+def assign_doc_ids(parsed: DataFrame, cfg: EngineConfig, slot: int = 0
+                   ) -> DataFrame:
+    """Attach a batch-monotone ``doc_id`` and its ``bucket``.
 
-    hash mode: doc_id = xxhash64(url) — stable and content-addressed.
-
-    monotone mode: doc_id = batch_seq·2^48 + monotonically_increasing_id()
-    — every id of batch k+1 exceeds every id of batch k, which is what
-    makes incremental posting merges tail-appends (codec.
-    append_posting_blob). The in-batch id is (partition << 33 | row): it is
-    assigned on a narrow, deterministically-partitioned chain (parquet scan
-    → mapInPandas) and immediately persisted by the caller's table append,
-    so a task retry regenerates identical values; the overflow guard keeps
-    the batch term inside its 2^48 slot (32k partitions x 8.6B rows per
-    ingest batch). ``bucket`` stays pmod(doc_id, num_buckets) — sequential
-    in-batch ids round-robin across buckets, so balance is preserved.
+    doc_id = slot·2^48 + monotonically_increasing_id(), with ``slot`` from
+    ``index_build.next_parsed_slot``: every id of a later batch exceeds
+    every id of an earlier one, so incremental posting merges are
+    tail-appends (codec.append_posting_blob). Ranking never reads the id
+    (ties break on (score, warc_ts, url), like the reference's date
+    tie-break, ranker.py:51-63). The in-batch id (partition << 33 | row) is
+    assigned on a narrow, deterministically-partitioned chain and persisted
+    at once by the caller's append, so a task retry regenerates identical
+    values. Envelope: < 2^15 batches per index and < 2^48 ids per batch;
+    exceeding either raises. ``bucket`` = pmod(doc_id, num_buckets), so
+    sequential in-batch ids round-robin across buckets.
     """
-    if cfg.doc_id_mode == "monotone":
-        if not 0 <= batch_seq < (1 << 15):
-            raise ValueError(
-                f"monotone doc_id batch_seq {batch_seq} outside [0, 2^15)"
-            )
-        mid = F.monotonically_increasing_id()
-        base = F.lit(batch_seq << DOC_ID_BATCH_SHIFT).cast("long")
-        doc_id = F.when(mid < F.lit(1 << DOC_ID_BATCH_SHIFT), base + mid
-                        ).otherwise(
-            F.raise_error(
-                F.lit("monotone doc_id overflow: > 2^48 ids in one batch "
-                      "(coalesce the ingest batch or split it)")
-            ).cast("long")
-        )
-    elif cfg.doc_id_mode == "hash":
-        doc_id = F.xxhash64("url")
-    else:
-        raise ValueError(f"unknown doc_id_mode {cfg.doc_id_mode!r}")
+    if not 0 <= slot < (1 << 15):
+        raise ValueError(f"doc_id batch slot {slot} outside [0, 2^15)")
+    mid = F.monotonically_increasing_id()
+    base = F.lit(slot << DOC_ID_BATCH_SHIFT).cast("long")
+    doc_id = F.when(mid < F.lit(1 << DOC_ID_BATCH_SHIFT), base + mid
+                    ).otherwise(
+        F.raise_error(
+            F.lit("doc_id overflow: > 2^48 ids in one batch "
+                  "(coalesce the ingest batch or split it)")
+        ).cast("long")
+    )
     return parsed.withColumn("doc_id", doc_id).withColumn(
         "bucket", F.pmod(F.col("doc_id"), F.lit(cfg.num_buckets)).cast("int")
     )
 
 
 def parse_corpus(
-    pages: DataFrame, config: EngineConfig | None = None, batch_seq: int = 0
+    pages: DataFrame, config: EngineConfig | None = None, slot: int = 0
 ) -> DataFrame:
     """web_pages DataFrame → parsed docs with doc_id + bucket columns.
 
-    ``doc_id`` is a 64-bit hash of the url by default (stable,
-    cluster-independent), or a batch-monotone id when
-    ``config.doc_id_mode == "monotone"`` (see ``assign_doc_ids``);
-    ``bucket`` doc-partitions the index so every term's postings are spread
-    across all shards (hot-term skew never lands on one reducer).
+    ``doc_id`` is batch-monotone: the batch's ``slot`` times 2^48 plus an
+    in-batch id (see ``assign_doc_ids``). ``bucket`` doc-partitions the
+    index so every term's postings are spread across all shards (hot-term
+    skew never lands on one reducer).
     """
     cfg = config or EngineConfig()
     parsed = pages.select("url", "warc_ts", "text").mapInPandas(
         _parse_batches(cfg.stemming), schema=PARSED_SCHEMA
     )
-    return assign_doc_ids(parsed, cfg, batch_seq)
+    return assign_doc_ids(parsed, cfg, slot)

@@ -522,11 +522,13 @@ def sim_ivf_kmeans_topk(spark: SparkSession, sf_dir: str, dim: int = 64,
     )
 
 
-def sql_sim_ivf_kmeans_topk(dim: int = 64, stride: int = 1) -> str:
+def sql_sim_ivf_kmeans_topk(dim: int = 64,
+                            max_train: int = KMEANS_MAX_TRAIN) -> str:
     """Unrolled-Lloyd DuckDB replay of the identical k-means + IVF query.
 
-    ``stride`` replays the bounded training sample (vec_id % stride = 0 —
-    the same predicate _train_kmeans applies); assignment/probe/rerank
+    The training sample is replayed with the stride _train_kmeans uses,
+    _train_stride(count, max_train), computed from the table's row count
+    when the query runs (vec_id % stride = 0); assignment/probe/rerank
     CTEs always run over the full table, like the Spark side."""
     init_ids = ", ".join(str(i) for i in KMEANS_INIT_IDS)
     dist = ("round(list_sum(list_transform(range(1, {n}), "
@@ -534,7 +536,8 @@ def sql_sim_ivf_kmeans_topk(dim: int = 64, stride: int = 1) -> str:
             ).format(n=dim + 1)
     ctes = [
         f"e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)",
-        f"t AS (SELECT * FROM e WHERE vec_id % {stride} = 0)",
+        (f"t AS (SELECT * FROM e WHERE vec_id % (SELECT greatest(1, "
+         f"(count(*) + {max_train} - 1) // {max_train}) FROM e) = 0)"),
         ("cent0 AS (SELECT (row_number() OVER (ORDER BY vec_id) - 1)::INT "
          f"AS cell, v AS c FROM e WHERE vec_id IN ({init_ids}))"),
     ]

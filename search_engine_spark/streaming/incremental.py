@@ -173,21 +173,27 @@ def compact_staging(
     staged postings as extra rows would silently shadow existing lists.
     Compaction exploits the build's own checkpoint structure:
 
-    1. append the staged parse rows (minus already-indexed doc_ids —
+    1. append the staged parse rows (minus already-indexed urls —
        idempotence under replay/re-crawl, and minus duplicates WITHIN
        staging from foreachBatch retries or re-crawls of the same url)
        as a new batch of the ``parsed`` table, with lineage in the
-       manifest;
+       manifest; its doc ids are re-assigned in the batch's slot
+       (``index_build.next_parsed_slot``), above every existing id;
     2. INCREMENTAL derive (``merge_derive_tables``): posting rows whose
        (bucket, term) group gained no new docs pass through the exchange
-       byte-identical (no decode); only touched groups decode-merge-
-       re-encode; doc_stats appends the fresh rows; corpus_stats folds
+       byte-identical (no decode); touched groups tail-append the fresh
+       postings; doc_stats appends the fresh rows; corpus_stats folds
        the increment. The expensive parse is never recomputed, and
        neither is the untouched bulk of the postings table.
     3. fall back to the full re-derive (``derive_index_tables`` over the
-       whole parsed relation) when the incremental preconditions fail —
-       a table is missing, or the ``derived_from_batches`` stamp says the
+       whole parsed relation, after dropping every derived table) when
+       the incremental preconditions fail — a table is missing, the index
+       is Iceberg-backed, or the ``derived_from_batches`` stamp says the
        derived tables are stale (a previous compaction crashed mid-swap).
+
+    An index without the ``doc_id_mode: "monotone"`` manifest stamp was
+    built with url-hash doc ids; compacting into it raises ``ValueError``
+    (rebuild it). Search on such an index is unaffected.
 
     Crash-safety is keep-old-until-swap: every table write is atomic
     (_tmp + rename) and the ``derived_from_batches`` manifest stamp is
@@ -206,11 +212,23 @@ def compact_staging(
 
     from search_engine_spark.operators.index_build import (
         config_from_properties, derive_index_tables, merge_derive_tables,
+        next_parsed_slot, require_parsed_docs,
     )
+    from search_engine_spark.operators.parse import assign_doc_ids
     from search_engine_spark.sources.catalog import CatalogAdapter
 
     cat = CatalogAdapter(index_path)
-    cfg = config_from_properties(cat.properties(), explicit=config)
+    require_parsed_docs(cat)
+    props = cat.properties()
+    if props.get("doc_id_mode") != "monotone":
+        # url-hash ids: fresh postings would interleave with old ones
+        raise ValueError(
+            f"index {index_path} lacks the batch-monotone doc-id stamp "
+            f"(doc_id_mode={props.get('doc_id_mode')!r}): it was built with "
+            "url-hash ids, or its build never finished; rebuild it "
+            "(build_index into a fresh path) before compacting into it"
+        )
+    cfg = config_from_properties(props, explicit=config)
 
     # Staleness gate, computed BEFORE this invocation appends anything:
     # the derived tables are trustworthy only if they absorbed every batch
@@ -223,56 +241,36 @@ def compact_staging(
     # folded but postings not) and then re-stamp with the FULL batch list,
     # permanently masking the gap. A missing stamp is treated as stale:
     # it means no derive ever completed its final commit.
-    stamp_ok = cat.properties().get("derived_from_batches") == sorted(
+    stamp_ok = props.get("derived_from_batches") == sorted(
         map(str, cat.completed_batches("parsed"))
     )
 
     staged = spark.read.parquet(staging_dir)
 
-    # Doc identity key: in hash mode doc_id IS the url hash, so id equality
-    # = url equality; in monotone mode ids are batch-sequential, so re-crawl
-    # dedup must join on the url itself (staging ids are provisional and
-    # re-assigned below).
-    key = "url" if cfg.doc_id_mode == "monotone" else "doc_id"
-    # read_table (not a direct parquet read) so an Iceberg-routed index
-    # compacts the table it actually wrote (catalog dispatches on ident)
-    existing = cat.read_table(spark, "parsed").select(key)
+    # Doc identity is the url: ids are batch-sequential, so re-crawl dedup
+    # joins on the url itself. read_table (not a direct parquet read) so an
+    # Iceberg-routed index compacts the table it actually wrote (catalog
+    # dispatches on ident).
+    existing = cat.read_table(spark, "parsed").select("url")
     # latest-wins within staging: the same doc can appear twice in the
     # staging dir (foreachBatch retry re-appending after a partial write,
     # or the same url crawled twice before compaction ran)
-    w = Window.partitionBy(key).orderBy(
-        F.col("warc_ts").desc_nulls_last(), F.col("url")
-    )
+    w = Window.partitionBy("url").orderBy(F.col("warc_ts").desc_nulls_last())
     fresh = (
-        staged.join(existing, key, "left_anti")
+        staged.join(existing, "url", "left_anti")
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-    if cfg.doc_id_mode == "monotone":
-        # staging ids were assigned with a provisional batch_seq by the
-        # micro-batch parse; re-assign from the NEXT free 2^48 slot above
-        # everything already in parsed so the merge stays a tail-append
-        # (max() is a cheap parquet-stats agg on a long column)
-        from search_engine_spark.operators.parse import (
-            DOC_ID_BATCH_SHIFT, assign_doc_ids,
-        )
-
-        max_id = (
-            cat.read_table(spark, "parsed")
-            .agg(F.max("doc_id")).collect()[0][0]
-        )
-        next_seq = (int(max_id) >> DOC_ID_BATCH_SHIFT) + 1
-        fresh = assign_doc_ids(fresh.drop("doc_id", "bucket"), cfg, next_seq)
+    # staging ids are provisional: re-assign them in this batch's slot
+    fresh = assign_doc_ids(fresh.drop("doc_id", "bucket"), cfg,
+                           next_parsed_slot(cat))
     fresh = fresh.persist()  # evaluated twice: the isEmpty probe + append
 
     batch_id = "compact-%d" % (
         sum(1 for b in cat.completed_batches("parsed")
             if str(b).startswith("compact-")) + 1
     )
-    derived_tables = ("corpus_stats", "doc_stats", "doc_stats_topical",
-                      "postings", "term_stats", "vocab_capitals",
-                      "vocab_entities")
     if fresh.isEmpty():
         # replay after a completed (or crashed) compaction: nothing to
         # append. If the stale stamp says the derived tables predate the
@@ -284,14 +282,6 @@ def compact_staging(
                          metrics={"strategy": "stream_compact",
                                   "staging_dir": staging_dir})
     fresh.unpersist()  # appended (or empty); all later reads go via parsed
-
-    if not stamp_ok:
-        # stale (or never-committed) stamp: the derived tables may be
-        # internally inconsistent — drop them so the fallback re-derives
-        # the complete index from ``parsed`` (always complete, including
-        # the batch just appended)
-        for table in derived_tables:
-            cat.drop_table(table)
 
     # Iceberg routing: merge_derive_tables overwrites doc_stats/postings
     # with plans that READ the same table. The parquet branch is safe
@@ -309,6 +299,16 @@ def compact_staging(
                 for t in ("corpus_stats", "doc_stats", "postings",
                           "term_stats", "vocab_capitals", "vocab_entities"))
     )
+    if not stamp_ok or (batch_id is not None and not incremental_ok):
+        # the full re-derive skips every table that exists: whenever it must
+        # absorb batches the tables have not seen (stale stamp, or a fresh
+        # batch the incremental path cannot take), drop them all so it
+        # re-derives the whole index from ``parsed``
+        for table in ("corpus_stats", "doc_stats", "doc_stats_topical",
+                      "postings", "term_stats", "vocab_capitals",
+                      "vocab_entities"):
+            cat.drop_table(table)
+
     if incremental_ok:
         stage_sec, n_docs, avg_dl = merge_derive_tables(
             spark, cat, batch_id, cfg

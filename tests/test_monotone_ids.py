@@ -1,16 +1,18 @@
-"""Monotone doc_id mode (EngineConfig.doc_id_mode='monotone').
+"""Batch-monotone doc ids (parse.assign_doc_ids).
 
 End-to-end invariants of the tail-append compaction design:
 
 - rankings are doc_id-independent — the fixture query set returns identical
-  (qid, rank, url, score) on a hash-mode index, a monotone-mode index, and
-  a monotone-mode index grown by streaming compaction;
-- term_stats (term, df) is identical across all three;
+  (qid, rank, url, score) on a rebuilt index and on an index grown by
+  streaming compaction;
+- term_stats (term, df) is identical across both;
 - compaction takes the incremental path and the spliced hot-term groups
   really are multi-block (the splice-eligible shape);
-- re-crawls dedup by URL (ids are no longer content-addressed);
+- re-crawls dedup by URL (ids are not content-addressed);
 - the id layout: every compaction batch lands in its own 2^48 slot above
-  all earlier ids.
+  all earlier ids;
+- an index built before ids became batch-monotone refuses compaction but
+  still answers queries.
 
 Splice byte-correctness itself is pinned by tests/test_codec_append.py.
 """
@@ -73,17 +75,13 @@ def test_monotone_mode_end_to_end(spark, tmp_path):
     all_path = str(tmp_path / "all.parquet")
     pq.write_table(full, all_path)
 
-    # three 480-doc indexes: hash rebuild, monotone rebuild, monotone grown
-    hash_idx = str(tmp_path / "hash_idx")
-    build_index(spark, spark.read.parquet(all_path), hash_idx,
-                _cfg(doc_id_mode="hash"), resume_batches=1)
-
+    # two 480-doc indexes: a rebuild, and a base index grown by compaction
+    mcfg = _cfg()
     mono_rebuild = str(tmp_path / "mono_rebuild")
-    build_index(spark, spark.read.parquet(all_path), mono_rebuild,
-                _cfg(doc_id_mode="monotone"), resume_batches=2)
+    build_index(spark, spark.read.parquet(all_path), mono_rebuild, mcfg,
+                resume_batches=2)
 
     mono_idx = str(tmp_path / "mono_idx")
-    mcfg = _cfg(doc_id_mode="monotone")
     build_index(spark, spark.read.parquet(base), mono_idx, mcfg,
                 resume_batches=1)
     incremental_index_update(spark, str(inc_dir), str(tmp_path / "staging"),
@@ -92,15 +90,10 @@ def test_monotone_mode_end_to_end(spark, tmp_path):
     assert out["incremental"] is True
     assert out["n_docs"] == 480 - _dropped(full)
 
-    # term_stats identity: compacted == monotone rebuild == hash rebuild
-    ts = _term_stats(spark, mono_idx)
-    assert ts == _term_stats(spark, mono_rebuild)
-    assert ts == _term_stats(spark, hash_idx)
-
-    # rank identity across id modes and across grow-vs-rebuild
+    # grown == rebuild: term_stats and ranks
+    assert _term_stats(spark, mono_idx) == _term_stats(spark, mono_rebuild)
     res = _results(spark, mono_idx, mcfg)
-    assert res == _results(spark, mono_rebuild, _cfg(doc_id_mode="monotone"))
-    assert res == _results(spark, hash_idx, _cfg(doc_id_mode="hash"))
+    assert res == _results(spark, mono_rebuild, mcfg)
     assert len(res) > 50  # non-vacuous
 
     post = spark.read.parquet(f"{mono_idx}/postings")
@@ -136,19 +129,46 @@ def _dropped(tbl) -> int:
 def test_monotone_batch_seq_envelope():
     from search_engine_spark.operators.parse import assign_doc_ids
 
-    with pytest.raises(ValueError, match="batch_seq"):
-        assign_doc_ids(None, EngineConfig(doc_id_mode="monotone"),
-                       batch_seq=1 << 15)
+    with pytest.raises(ValueError, match="slot"):
+        assign_doc_ids(None, EngineConfig(), slot=1 << 15)
 
 
-def test_unknown_doc_id_mode_raises(spark, tmp_path):
+def test_pre_upgrade_index_refuses_compaction(spark, tmp_path):
+    """An index without the batch-monotone stamp was built with url-hash
+    ids: compaction must refuse it with the rebuild error, search must
+    still answer."""
     import pyarrow.parquet as pq
 
+    from search_engine_spark.operators.index_build import build_index
     from search_engine_spark.operators.parse import parse_corpus
+    from search_engine_spark.sources.catalog import CatalogAdapter
     from search_engine_spark.sources.fixtures import generate_web_pages
+    from search_engine_spark.streaming.incremental import compact_staging
 
-    p = str(tmp_path / "p.parquet")
-    pq.write_table(generate_web_pages(20), p)
-    with pytest.raises(ValueError, match="doc_id_mode"):
-        parse_corpus(spark.read.parquet(p),
-                     EngineConfig(doc_id_mode="zigzag")).collect()
+    full = generate_web_pages(160)
+    base = str(tmp_path / "base.parquet")
+    pq.write_table(full.slice(0, 120), base)
+    idx = str(tmp_path / "old_idx")
+    cfg = _cfg()
+    build_index(spark, spark.read.parquet(base), idx, cfg, resume_batches=1)
+    before = _results(spark, idx, cfg)
+    assert before
+
+    staging = str(tmp_path / "staging")
+    more = str(tmp_path / "more.parquet")
+    pq.write_table(full.slice(120, 40), more)
+    parse_corpus(spark.read.parquet(more), cfg).write.parquet(staging)
+
+    cat = CatalogAdapter(idx)
+    cat.set_properties({"doc_id_mode": "hash"})
+    with pytest.raises(ValueError, match="rebuild"):
+        compact_staging(spark, idx, staging, cfg)
+    # a missing stamp is refused the same way
+    manifest = cat._load()
+    del manifest["properties"]["doc_id_mode"]
+    cat._commit(manifest, "set_properties")
+    with pytest.raises(ValueError, match="rebuild"):
+        compact_staging(spark, idx, staging, cfg)
+    # nothing was appended, and search is unchanged
+    assert len(cat.completed_batches("parsed")) == 1
+    assert _results(spark, idx, cfg) == before

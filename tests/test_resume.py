@@ -249,6 +249,9 @@ def test_resume_processes_files_added_after_crash(
     current = sorted(spark.read.parquet(multi).inputFiles())
     recorded = sorted(f for e in entries for f in e["input_files"])
     assert recorded == current
+    # the regrouped resume batches got fresh id slots: no doc_id repeats
+    parsed = cat.read_table(spark, "parsed")
+    assert parsed.count() == parsed.select("doc_id").distinct().count()
 
     # index equals a fresh build over the grown corpus
     fresh_path = str(tmp_path / "idx_grow_fresh")

@@ -3,8 +3,8 @@
 At 100 TB the coarse quantizer trains on a bounded deterministic sample
 (vec_id stride) while cell ASSIGNMENT covers the full table. These tests
 force a small ``max_train`` so the sampled path actually runs at fixture
-scale, and cross-check the full pipeline against the DuckDB replay with
-the same stride baked into the SQL.
+scale, and cross-check the full pipeline against the DuckDB replay, which
+derives the same stride from the table's row count.
 """
 
 import duckdb
@@ -55,11 +55,8 @@ def test_sampled_ivf_matches_duckdb_replay(spark):
     con = duckdb.connect()
     con.sql(f"CREATE VIEW embeddings AS "
             f"SELECT * FROM '{SF_DIR}/embeddings.parquet'")
-    n = con.sql("SELECT count(*) FROM embeddings").fetchone()[0]
     want = sorted(
         (r[0], r[1], r[2], round(r[3], 6))
-        for r in con.sql(
-            sql_sim_ivf_kmeans_topk(stride=_train_stride(n, 100))
-        ).fetchall()
+        for r in con.sql(sql_sim_ivf_kmeans_topk(max_train=100)).fetchall()
     )
     assert got == want and len(got) > 0

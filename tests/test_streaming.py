@@ -521,3 +521,94 @@ def test_compaction_avgdl_drift_keeps_wand_exact(spark, dirs, tmp_path):
         queries, k=10, use_wand=True).collect()))
     assert wand == exhaustive
     assert len(exhaustive) > 0
+
+
+def _table_counts(spark, idx):
+    from search_engine_spark.sources.catalog import CatalogAdapter
+
+    cat = CatalogAdapter(idx)
+    n_docs = cat.read_table(spark, "corpus_stats").collect()[0]["n_docs"]
+    return (n_docs, cat.read_table(spark, "parsed").count(),
+            cat.read_table(spark, "doc_stats").count())
+
+
+def test_compaction_fallback_keeps_fresh_docs(spark, dirs, tmp_path):
+    """A fresh batch the incremental path cannot take (here a missing
+    vocab_capitals table, as on an index from before the vocabulary
+    states were persisted) must reach every derived table: the full
+    re-derive drops them all and rebuilds from ``parsed`` instead of
+    skipping the tables that exist."""
+    import pyarrow.parquet as pq
+
+    from search_engine_spark.operators.index_build import build_index
+    from search_engine_spark.sources.catalog import CatalogAdapter
+    from search_engine_spark.sources.fixtures import generate_web_pages
+    from search_engine_spark.streaming.incremental import (
+        compact_staging, incremental_index_update,
+    )
+
+    cfg = EngineConfig(num_buckets=4, shuffle_partitions=8)
+    full = generate_web_pages(260)
+    base_path = str(tmp_path / "base.parquet")
+    pq.write_table(full.slice(0, 200), base_path)
+    pq.write_table(full.slice(200, 60),
+                   os.path.join(dirs["incoming"], "more.parquet"))
+    idx = str(tmp_path / "fallback_idx")
+    build_index(spark, spark.read.parquet(base_path), idx, cfg,
+                resume_batches=1)
+    n_before = _table_counts(spark, idx)[0]
+    CatalogAdapter(idx).drop_table("vocab_capitals")
+
+    incremental_index_update(
+        spark, dirs["incoming"], dirs["staging"], dirs["checkpoint"], cfg
+    )
+    out = compact_staging(spark, idx, dirs["staging"], cfg)
+    assert out["batch_id"] == "compact-1"
+    assert out["incremental"] is False
+    n_docs, n_parsed, n_doc_stats = _table_counts(spark, idx)
+    assert n_docs == n_parsed == n_doc_stats == out["n_docs"]
+    assert n_docs > n_before
+
+
+def test_compaction_into_empty_index(spark, dirs, tmp_path):
+    """An index whose ``parsed`` table is empty (every page cleaned to
+    nothing) cannot be built or compacted into: both raise a ValueError
+    that names the cause, never a TypeError from null corpus stats."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from search_engine_spark.operators.index_build import build_index
+    from search_engine_spark.sources.catalog import CatalogAdapter
+    from search_engine_spark.sources.fixtures import (
+        EMPTY_SNIPPET, generate_web_pages,
+    )
+    from search_engine_spark.streaming.incremental import (
+        compact_staging, incremental_index_update,
+    )
+
+    cfg = EngineConfig(num_buckets=4, shuffle_partitions=8)
+    full = generate_web_pages(100)
+    blank = full.slice(0, 40)
+    blank = blank.set_column(
+        blank.schema.get_field_index("text"), "text",
+        pa.array([EMPTY_SNIPPET] * blank.num_rows, pa.string()),
+    )
+    blank_path = str(tmp_path / "blank.parquet")
+    pq.write_table(blank, blank_path)
+    pq.write_table(full.slice(40, 60),
+                   os.path.join(dirs["incoming"], "new.parquet"))
+
+    idx = str(tmp_path / "empty_idx")
+    with pytest.raises(ValueError, match="no parsed documents"):
+        build_index(spark, spark.read.parquet(blank_path), idx, cfg,
+                    resume_batches=1)
+    cat = CatalogAdapter(idx)
+    assert cat.is_complete("parsed")
+    assert cat.read_table(spark, "parsed").count() == 0
+
+    incremental_index_update(
+        spark, dirs["incoming"], dirs["staging"], dirs["checkpoint"], cfg
+    )
+    with pytest.raises(ValueError, match="no parsed documents"):
+        compact_staging(spark, idx, dirs["staging"], cfg)
+    assert len(cat.completed_batches("parsed")) == 1  # nothing appended
