@@ -459,8 +459,9 @@ def main() -> None:
     # increment touches 76-94% of posting MASS even on realistic
     # vocabularies — head terms hold the mass and are always hit; see
     # BASELINE.md). Batch-monotone doc ids make merges
-    # block-boundary TAIL-APPENDS (codec.append_posting_blob) — the old
-    # bulk is a header-adjusted memcpy, work is increment-proportional.
+    # TAIL SPLICES (codec._encode_group_batch): only the old list's last
+    # block re-encodes, the rest is a header-adjusted memcpy, so work is
+    # increment-proportional.
     # Measured here on a 2M-term Zipf vocabulary (most terms df<10, like a
     # real crawl). The increment-proportionality claim is a TREND, not a
     # single ratio: a Zipf increment's distinct-term count grows with its

@@ -30,7 +30,6 @@ def main() -> None:
     ap.add_argument("--resume-batches", type=int, default=4)
     ap.add_argument("--stemming", action="store_true")
     ap.add_argument("--glove", default=None)
-    ap.add_argument("--no-compress", action="store_true")
     ap.add_argument(
         "--topical-terms", default=None,
         help="comma-separated terms for the doc_stats_topical shard "
@@ -56,7 +55,7 @@ def main() -> None:
     pages = spark.read.option("recursiveFileLookup", "true").parquet(args.pages)
     metrics = build_index(
         spark, pages, args.index_path, cfg,
-        compress=not args.no_compress, resume_batches=args.resume_batches,
+        resume_batches=args.resume_batches,
     )
     print(json.dumps({"status": "ok", **metrics}))
     spark.stop()

@@ -14,6 +14,14 @@ Replaces the reference's pickle posting files (utils.py:14-51,
 indexer.py:89-116); the varbyte/delta layout follows the standard IR
 literature (e.g. Manning et al., IIR ch.5).
 
+One writer: ``_encode_group_batch`` is the only code that builds a blob,
+its header and its side columns. The build's streaming encoder
+(``encode_sorted_postings``) feeds it whole groups; the fold
+(index_build.merge_derive_tables) feeds it fresh postings plus the old
+blobs they extend, and it splices the new tail onto each old list's kept
+blocks. ``encode_posting_list`` is a one-group call into it. One reader:
+``_decode_blocks`` decodes any set of (blob, block) pairs in one pass.
+
 Everything is vectorized numpy — no per-int Python in the hot path.
 
 Blob layout (little-endian uint32 header):
@@ -27,10 +35,7 @@ Blob layout (little-endian uint32 header):
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 
 from search_engine_spark.config import EngineConfig
 
@@ -123,58 +128,83 @@ def encode_posting_list(
     doc_lengths: np.ndarray,
     tfs: np.ndarray,
     block_size: int,
-    idf: float,
     avg_dl: float,
     k: float = 1.2,
     b: float = 0.75,
 ) -> tuple[bytes, np.ndarray, np.ndarray]:
-    """Encode one sorted posting list.
+    """Encode one sorted posting list: a one-group call into
+    ``_encode_group_batch``, for tests and tools.
 
     Returns (blob, block_last_docid[int64], block_max_score[float64]).
     """
     n = len(doc_ids)
-    doc_ids = doc_ids.astype(np.int64)
-    n_blocks = (n + block_size - 1) // block_size
-    bounds = np.arange(0, n_blocks + 1) * block_size
-    bounds[-1] = n
-    block_starts = bounds[:-1]
-
-    # per-block restart: first value absolute (zigzag), rest are gaps
-    gaps = np.empty(n, np.uint64)
-    diffs = np.diff(doc_ids).astype(np.int64)
-    if n > 1:
-        gaps[1:] = diffs.astype(np.uint64)
-    firsts = zigzag_encode(doc_ids[block_starts])
-    gaps[block_starts] = firsts
-
-    gap_stream, gap_len = vb_encode(gaps)
-    dl_stream, dl_len = vb_encode(doc_lengths.astype(np.uint64))
-    tf_stream, tf_len = vb_encode(tfs.astype(np.uint64))
-
-    def _offsets(lens: np.ndarray) -> np.ndarray:
-        csum = np.concatenate(([0], np.cumsum(lens)))
-        return csum[block_starts].astype(np.uint32)
-
-    header = np.array(
-        [n, block_size, n_blocks, len(gap_stream), len(dl_stream), len(tf_stream)],
-        dtype=_HDR,
+    rb = _encode_group_batch(
+        np.zeros(1, np.int64), [""], np.asarray(doc_ids, np.int64),
+        np.asarray(doc_lengths), np.asarray(tfs), np.array([0]),
+        np.array([n]), block_size, avg_dl, k, b,
     )
-    blob = (
-        header.tobytes()
-        + _offsets(gap_len).tobytes()
-        + _offsets(dl_len).tobytes()
-        + _offsets(tf_len).tobytes()
-        + gap_stream
-        + dl_stream
-        + tf_stream
+    return (
+        rb.column("blob")[0].as_py(),
+        rb.column("block_last")[0].values.to_numpy(),
+        rb.column("block_max")[0].values.to_numpy(),
     )
 
-    block_last = doc_ids[bounds[1:] - 1]
-    contrib = _bm25_contribution(
-        tfs.astype(np.float64), doc_lengths.astype(np.float64), idf, avg_dl, k, b
-    )
-    block_max = np.maximum.reduceat(contrib, block_starts)
-    return blob, block_last, block_max
+
+def _u32_at(buf: np.ndarray, pos: np.ndarray) -> np.ndarray:
+    """Little-endian uint32 words at byte positions ``pos`` (any shape)."""
+    pos = np.asarray(pos, np.int64)
+    return buf[pos[..., None] + np.arange(4)].view("<u4")[..., 0].astype(
+        np.int64)
+
+
+def _ranges(lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
+    """The concatenated index ranges ``[lo[i], hi[i])``."""
+    span = hi - lo
+    return np.repeat(lo - (np.cumsum(span) - span), span) + np.arange(
+        int(span.sum()))
+
+
+def _blob_headers(blobs: list[bytes]):
+    """Join blobs into one byte buffer and read every header.
+
+    Returns (buf, base, hdr): ``base[g]`` is blob g's byte offset in
+    ``buf`` and ``hdr[g]`` its six header words.
+    """
+    buf = np.frombuffer(blobs[0] if len(blobs) == 1 else b"".join(blobs),
+                        np.uint8)
+    size = np.fromiter(map(len, blobs), np.int64, len(blobs))
+    base = np.cumsum(size) - size
+    return buf, base, _u32_at(buf, base[:, None] + 4 * np.arange(6))
+
+
+def _decode_blocks(buf, base, hdr, g: np.ndarray, blk: np.ndarray):
+    """Decode block ``blk[i]`` of blob ``g[i]`` for every i, in one pass.
+
+    Returns (doc_ids, dls, tfs, postings per decoded block); the postings
+    come out in selection order.
+    """
+    n, bs, nb = hdr[g, 0], hdr[g, 1], hdr[g, 2]
+    lens = hdr[g, 3:6]
+    stream = (base[g] + 24 + 12 * nb)[:, None] + np.cumsum(lens, 1) - lens
+    word = (base[g] + 24)[:, None] + 4 * (
+        np.arange(3) * nb[:, None] + blk[:, None])
+    last = (blk + 1 == nb)[:, None]
+    lo = stream + _u32_at(buf, word)
+    hi = stream + np.where(last, lens, _u32_at(buf, np.where(last, word,
+                                                             word + 4)))
+    # one varbyte decode for all three streams: each holds one value per
+    # posting, so the result splits into three equal parts
+    gaps, dls, tfs = vb_decode(buf[_ranges(lo.T.ravel(), hi.T.ravel())]
+                               ).reshape(3, -1)
+    counts = np.minimum(bs, n - blk * bs)
+    # every block restarts with an absolute (zigzag) first id; the int64
+    # cumsum may wrap across blocks, the per-block difference never does
+    first = np.cumsum(counts) - counts
+    v = gaps.astype(np.int64)
+    v[first] = zigzag_decode(gaps[first])
+    csum = np.cumsum(v)
+    ids = csum - np.repeat(csum[first] - v[first], counts)
+    return ids, dls.astype(np.int64), tfs.astype(np.int64), counts
 
 
 def decode_posting_list(
@@ -185,188 +215,70 @@ def decode_posting_list(
     ``blocks``: sorted block indices to decode (None → all). Selected-block
     decode reads only those byte ranges — this is what WAND skipping uses.
     """
-    buf = np.frombuffer(blob, np.uint8)
-    hdr = np.frombuffer(blob, _HDR, count=6)
-    n, block_size, n_blocks = int(hdr[0]), int(hdr[1]), int(hdr[2])
-    lens = hdr[3:6].astype(np.int64)
-    off0 = 24 + 4 * 3 * n_blocks
-    offs = np.frombuffer(blob, _HDR, count=3 * n_blocks, offset=24).reshape(3, n_blocks)
-    stream_starts = off0 + np.concatenate(([0], np.cumsum(lens)))[:3]
-
-    def _block_bytes(s: int, blk: int) -> np.ndarray:
-        lo = stream_starts[s] + int(offs[s, blk])
-        hi = (
-            stream_starts[s] + int(offs[s, blk + 1])
-            if blk + 1 < n_blocks
-            else stream_starts[s] + int(lens[s])
-        )
-        return buf[lo:hi]
-
-    if blocks is None:
-        blocks = np.arange(n_blocks)
-
-    out_ids, out_dl, out_tf = [], [], []
-    for blk in blocks:
-        g = vb_decode(_block_bytes(0, int(blk)))
-        ids = np.empty(len(g), np.int64)
-        if len(g):
-            ids[0] = zigzag_decode(g[:1])[0]
-            if len(g) > 1:
-                ids[1:] = g[1:].astype(np.int64)
-            ids = np.cumsum(ids)
-        out_ids.append(ids)
-        out_dl.append(vb_decode(_block_bytes(1, int(blk))).astype(np.int64))
-        out_tf.append(vb_decode(_block_bytes(2, int(blk))).astype(np.int64))
-
-    return (
-        np.concatenate(out_ids) if out_ids else np.zeros(0, np.int64),
-        np.concatenate(out_dl) if out_dl else np.zeros(0, np.int64),
-        np.concatenate(out_tf) if out_tf else np.zeros(0, np.int64),
-    )
+    buf, base, hdr = _blob_headers([blob])
+    blk = (np.arange(hdr[0, 2]) if blocks is None
+           else np.asarray(blocks, np.int64))
+    return _decode_blocks(buf, base, hdr, np.zeros(len(blk), np.int64),
+                          blk)[:3]
 
 
-def append_posting_blob(
-    old_blob: bytes,
-    old_block_last: np.ndarray,
-    old_block_max: np.ndarray,
-    new_ids: np.ndarray,
-    new_dls: np.ndarray,
-    new_tfs: np.ndarray,
-    block_size: int,
-    avg_dl: float,
-    k: float = 1.2,
-    b: float = 0.75,
-) -> tuple[bytes, np.ndarray, np.ndarray]:
-    """Tail-append new postings to an encoded blob WITHOUT decoding its bulk.
-
-    Precondition (batch-monotone doc ids, parse.assign_doc_ids): every
-    ``new_ids`` value exceeds the blob's last doc id — asserted against
-    ``old_block_last[-1]``. Because every block restarts with an absolute
-    first value, the old blob's full blocks are byte-reusable as-is: only
-    its final PARTIAL block (< block_size postings) is decoded, merged with
-    the new postings, and re-encoded as the tail; the prefix is a
-    header-adjusted memcpy. Work is O(block_size + len(new_ids)) regardless
-    of how long the existing list is — this is what makes incremental
-    compaction increment-proportional for hot terms.
-
-    Splicing at a block boundary reproduces the exact block layout a
-    from-scratch encode of the concatenated list would produce, so (at
-    equal ``avg_dl``) the result is BYTE-IDENTICAL to
-    ``encode_posting_list(concat(...))`` — pinned by
-    tests/test_codec_append.py. The caller keeps the old row's
-    ``enc_avgdl`` bookkeeping: prefix block_max values were computed at the
-    OLD encode-time avg_dl, tail values at ``avg_dl``, so the merged row's
-    enc_avgdl must be min(old_enc_avgdl, avg_dl) for the query-side
-    max(1, avg_dl_now/enc_avgdl) scaling to remain an upper bound for every
-    block.
-
-    Returns (blob, block_last, block_max) like ``encode_posting_list``.
-    """
-    hdr = np.frombuffer(old_blob, _HDR, count=6)
-    n1, bs, nb1 = int(hdr[0]), int(hdr[1]), int(hdr[2])
-    if bs != block_size:
-        raise ValueError(f"block_size mismatch: blob={bs} config={block_size}")
-    if int(old_block_last[-1]) >= int(new_ids[0]):
-        raise ValueError(
-            "append_posting_blob precondition violated: new doc ids must "
-            f"all exceed the blob's last id ({int(old_block_last[-1])} >= "
-            f"{int(new_ids[0])}) — not a monotone-id index?"
-        )
-    lens = hdr[3:6].astype(np.int64)
-    offs = np.frombuffer(old_blob, _HDR, count=3 * nb1, offset=24
-                         ).reshape(3, nb1)
-    streams_at = 24 + 4 * 3 * nb1
-    stream_start = streams_at + np.concatenate(([0], np.cumsum(lens)))[:3]
-
-    # prefix = the old blob's FULL blocks; a partial final block re-encodes
-    # together with the new postings so every merged block except the last
-    # stays exactly block_size long (the decoder's implicit-length layout)
-    tail_old = n1 % bs
-    P = nb1 - 1 if tail_old else nb1
-    if P:
-        cut = np.array([offs[s, P] if P < nb1 else lens[s] for s in range(3)],
-                       np.int64)
-    else:
-        cut = np.zeros(3, np.int64)
-    prefix = [
-        old_blob[int(stream_start[s]):int(stream_start[s] + cut[s])]
-        for s in range(3)
-    ]
-
-    if tail_old:
-        bids, bdls, btfs = decode_posting_list(old_blob, blocks=np.array([P]))
-        t_ids = np.concatenate([bids, new_ids.astype(np.int64)])
-        t_dls = np.concatenate([bdls, new_dls.astype(np.int64)])
-        t_tfs = np.concatenate([btfs, new_tfs.astype(np.int64)])
-    else:
-        t_ids = new_ids.astype(np.int64)
-        t_dls = new_dls.astype(np.int64)
-        t_tfs = new_tfs.astype(np.int64)
-    # idf=1.0: stored block_max is idf-free (CODEC_FORMAT_VERSION 2)
-    t_blob, t_last, t_max = encode_posting_list(
-        t_ids, t_dls, t_tfs, bs, 1.0, avg_dl, k, b
-    )
-
-    t_hdr = np.frombuffer(t_blob, _HDR, count=6)
-    nbt = int(t_hdr[2])
-    t_lens = t_hdr[3:6].astype(np.int64)
-    t_offs = np.frombuffer(t_blob, _HDR, count=3 * nbt, offset=24
-                           ).reshape(3, nbt)
-    t_streams_at = 24 + 4 * 3 * nbt
-    t_stream_start = t_streams_at + np.concatenate(
-        ([0], np.cumsum(t_lens)))[:3]
-    tail = [
-        t_blob[int(t_stream_start[s]):int(t_stream_start[s] + t_lens[s])]
-        for s in range(3)
-    ]
-
-    nb = P + nbt
-    header = np.array(
-        [n1 + len(new_ids), bs, nb,
-         cut[0] + t_lens[0], cut[1] + t_lens[1], cut[2] + t_lens[2]],
-        dtype=_HDR,
-    )
-    merged_offs = np.empty((3, nb), _HDR)
-    for s in range(3):
-        merged_offs[s, :P] = offs[s, :P]
-        merged_offs[s, P:] = t_offs[s] + cut[s]
-    blob = (
-        header.tobytes()
-        + merged_offs.tobytes()
-        + prefix[0] + tail[0]
-        + prefix[1] + tail[1]
-        + prefix[2] + tail[2]
-    )
-    block_last = np.concatenate(
-        [np.asarray(old_block_last, np.int64)[:P], t_last])
-    block_max = np.concatenate(
-        [np.asarray(old_block_max, np.float64)[:P], t_max])
-    return blob, block_last, block_max
+def decode_blobs(blobs: list[bytes]):
+    """Decode every block of every blob in one pass →
+    (doc_ids, dls, tfs, postings per blob), postings in blob order."""
+    buf, base, hdr = _blob_headers(blobs)
+    nb = hdr[:, 2]
+    g = np.repeat(np.arange(len(blobs)), nb)
+    blk = np.arange(int(nb.sum())) - np.repeat(np.cumsum(nb) - nb, nb)
+    ids, dls, tfs, _ = _decode_blocks(buf, base, hdr, g, blk)
+    return ids, dls, tfs, hdr[:, 0]
 
 
 # ---------------------------------------------------------------------------
-# DataFrame-level encoder (used by the index build)
+# The blob writer (used by the index build and the fold)
 # ---------------------------------------------------------------------------
 
-ENCODED_COLUMNS = [
-    "bucket", "term", "local_df", "blob", "block_last", "block_max",
-]
+_NO_PREFIX = (b"",) * 6
+
+
+def _by_group(group_a, a, group_b, b):
+    """Interleave two arrays by group id, ``a``'s items first in each."""
+    order = np.argsort(np.concatenate((group_a, group_b)), kind="stable")
+    return np.concatenate((a, b))[order]
 
 
 def _encode_group_batch(
     gbuckets, gterms, ids, dls, tfs, starts, ends,
-    block_size: int, avg_dl: float, k: float, b: float,
+    block_size: int, avg_dl: float, k: float, b: float, old=None,
 ):
-    """Encode every (closed) group of one batch in a single vectorized pass.
+    """Write the posting blobs of every (closed) group of one batch in a
+    single vectorized pass: the only code that builds a blob, its header
+    and its ``block_last``/``block_max``.
 
     ``gbuckets``/``gterms`` are per-group (length G); ``ids``/``dls``/``tfs``
     are the flat row arrays; ``starts``/``ends`` delimit each group's
     contiguous row range (groups tile ``[0, ends[-1])``). The whole batch is
     varbyte-encoded with ONE ``vb_encode`` per stream; per-group blobs are
-    then assembled from cumulative-byte-position slices. Same blob layout as
-    ``encode_posting_list`` (asserted equal by tests/test_codec_stream.py).
+    then assembled from cumulative-byte-position slices.
 
-    Returns an Arrow RecordBatch of encoded rows (ENCODED_COLUMNS).
+    ``old`` — the fold's tail splice: per group, the encoded list the rows
+    extend, as ``(blobs, block_lasts, block_maxes, enc_avgdls)``. Every
+    row id must exceed its old list's last id (batch-monotone ids,
+    parse.assign_doc_ids), else ValueError. Only each old list's LAST
+    block is decoded; its rows go in front of the group's rows and are
+    re-encoded with them. The earlier blocks are kept byte for byte:
+    every block restarts with an absolute id, so their offsets, stream
+    bytes, ``block_last`` and ``block_max`` go in front of the new tail
+    unchanged. Blocks stay aligned to multiples of ``block_size``, so the
+    blob equals a from-scratch encode of the whole list (at equal
+    avg_dl). Work per group is O(block_size + new rows), however long the
+    old list. The output gains ``enc_avgdl``: kept blocks carry bounds
+    computed at the old encode's avg_dl, so a group that keeps any gets
+    min(old, avg_dl) — the query side's max(1, avg_dl_now/enc_avgdl)
+    scaling then bounds every block — and a group that keeps none gets
+    avg_dl.
+
+    Returns an Arrow RecordBatch of encoded rows: bucket, term, local_df,
+    blob, block_last, block_max, plus ``enc_avgdl`` when ``old`` is given.
     """
     import pyarrow as pa
 
@@ -375,6 +287,49 @@ def _encode_group_batch(
     ids = ids[:n_rows]
     dls = dls[:n_rows]
     tfs = tfs[:n_rows]
+    kept = np.zeros(G, np.int64)        # old blocks kept in front, per group
+    cut = np.zeros((G, 3), np.int64)    # their byte length in each stream
+    prefix = [_NO_PREFIX] * G
+
+    if old is not None:
+        old_blobs, old_lasts, old_maxes, old_enc = old
+        buf, base, hdr = _blob_headers(old_blobs)
+        if (hdr[:, 1] != block_size).any():
+            raise ValueError(
+                f"block_size mismatch: blob={int(hdr[0, 1])} "
+                f"config={block_size}")
+        onb = hdr[:, 2]
+        kept = onb - 1
+        gi = np.arange(G)
+        t_ids, t_dls, t_tfs, t_n = _decode_blocks(buf, base, hdr, gi, kept)
+        t_end = np.cumsum(t_n)
+        seam = np.flatnonzero(t_ids[t_end - 1] >= ids[starts])
+        if len(seam):
+            g = int(seam[0])
+            raise ValueError(
+                f"posting merge: new doc id {int(ids[starts[g]])} <= old "
+                f"last id {int(t_ids[t_end[g] - 1])}: not a batch-monotone "
+                "index?")
+        t_grp = np.repeat(gi, t_n)
+        r_grp = np.repeat(gi, ends - starts)
+        ids = _by_group(t_grp, t_ids, r_grp, ids)
+        dls = _by_group(t_grp, t_dls, r_grp, dls)
+        tfs = _by_group(t_grp, t_tfs, r_grp, tfs)
+        glen = t_n + ends - starts
+        ends = np.cumsum(glen)
+        starts = ends - glen
+        n_rows = int(ends[-1])
+        # kept prefix: the offsets and stream bytes before the last block
+        ob = 24 + 4 * np.arange(3) * onb[:, None]
+        sb = 24 + 12 * onb[:, None] + np.cumsum(hdr[:, 3:6], 1) - hdr[:, 3:6]
+        cut = _u32_at(buf, base[:, None] + ob + 4 * kept[:, None])
+        prefix = [
+            tuple(blob[o:o + 4 * p] for o in ob_g)
+            + tuple(blob[s:s + c] for s, c in zip(sb_g, cut_g))
+            for blob, ob_g, sb_g, cut_g, p in zip(
+                old_blobs, ob.tolist(), sb.tolist(), cut.tolist(),
+                kept.tolist())
+        ]
 
     grp_len = ends - starts
     nblk = (grp_len + block_size - 1) // block_size
@@ -392,18 +347,15 @@ def _encode_group_batch(
         gaps[1:] = np.diff(ids).astype(np.uint64)
     gaps[bstart] = zigzag_encode(ids[bstart])
 
-    gap_stream, gap_nb = vb_encode(gaps)
-    dl_stream, dl_nb = vb_encode(dls.astype(np.uint64))
-    tf_stream, tf_nb = vb_encode(tfs.astype(np.uint64))
-    gap_pos = np.concatenate(([0], np.cumsum(gap_nb)))
-    dl_pos = np.concatenate(([0], np.cumsum(dl_nb)))
-    tf_pos = np.concatenate(([0], np.cumsum(tf_nb)))
-
-    # per-block byte offsets within each group's stream slice
-    gs = starts[blk_grp]
-    off_gap = (gap_pos[bstart] - gap_pos[gs]).astype("<u4").tobytes()
-    off_dl = (dl_pos[bstart] - dl_pos[gs]).astype("<u4").tobytes()
-    off_tf = (tf_pos[bstart] - tf_pos[gs]).astype("<u4").tobytes()
+    streams, offs, slen = [], [], []
+    for s, vals in enumerate((gaps, dls, tfs)):
+        stream, nbytes = vb_encode(vals.astype(np.uint64))
+        pos = np.concatenate(([0], np.cumsum(nbytes)))
+        streams.append((memoryview(stream), pos))
+        # per-block byte offsets within the group's stream, after the prefix
+        offs.append(memoryview((pos[bstart] - pos[starts[blk_grp]]
+                                + cut[blk_grp, s]).astype("<u4").tobytes()))
+        slen.append(cut[:, s] + pos[ends] - pos[starts])
 
     contrib = _bm25_contribution(
         tfs.astype(np.float64), dls.astype(np.float64), 1.0, avg_dl, k, b
@@ -412,37 +364,52 @@ def _encode_group_batch(
     blk_last = ids[bend - 1]
 
     headers = np.empty((G, 6), "<u4")
-    headers[:, 0] = grp_len
+    headers[:, 0] = kept * block_size + grp_len
     headers[:, 1] = block_size
-    headers[:, 2] = nblk
-    headers[:, 3] = gap_pos[ends] - gap_pos[starts]
-    headers[:, 4] = dl_pos[ends] - dl_pos[starts]
-    headers[:, 5] = tf_pos[ends] - tf_pos[starts]
+    headers[:, 2] = kept + nblk
+    headers[:, 3:6] = np.stack(slen, axis=1)
+    hdr_bytes = memoryview(headers.tobytes())
 
+    (gap_s, gap_pos), (dl_s, dl_pos), (tf_s, tf_pos) = streams
     blobs = []
     for g in range(G):
         ob, oe = 4 * int(nblk_excl[g]), 4 * int(nblk_excl[g + 1])
-        s, e = int(starts[g]), int(ends[g])
-        blobs.append(
-            headers[g].tobytes()
-            + off_gap[ob:oe] + off_dl[ob:oe] + off_tf[ob:oe]
-            + gap_stream[int(gap_pos[s]):int(gap_pos[e])]
-            + dl_stream[int(dl_pos[s]):int(dl_pos[e])]
-            + tf_stream[int(tf_pos[s]):int(tf_pos[e])]
-        )
-
-    blk_offsets = pa.array(nblk_excl.astype(np.int32))
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.array(np.asarray(gbuckets, np.int32)),
-            pa.array(list(gterms), pa.string()),
-            pa.array(grp_len.astype(np.int64)),
-            pa.array(blobs, pa.binary()),
-            pa.ListArray.from_arrays(blk_offsets, pa.array(blk_last, pa.int64())),
-            pa.ListArray.from_arrays(blk_offsets, pa.array(blk_max, pa.float64())),
-        ],
-        names=ENCODED_COLUMNS,
-    )
+        r0, r1 = int(starts[g]), int(ends[g])
+        p = prefix[g]
+        blobs.append(b"".join((
+            hdr_bytes[24 * g:24 * g + 24],
+            p[0], offs[0][ob:oe], p[1], offs[1][ob:oe], p[2], offs[2][ob:oe],
+            p[3], gap_s[gap_pos[r0]:gap_pos[r1]],
+            p[4], dl_s[dl_pos[r0]:dl_pos[r1]],
+            p[5], tf_s[tf_pos[r0]:tf_pos[r1]],
+        )))
+    columns = {
+        "bucket": pa.array(np.asarray(gbuckets, np.int32)),
+        "term": pa.array(list(gterms), pa.string()),
+        "local_df": pa.array(headers[:, 0].astype(np.int64)),
+        "blob": pa.array(blobs, pa.binary()),
+    }
+    if old is not None:
+        # each old list's last block was re-encoded into the tail
+        keep = np.ones(int(onb.sum()), bool)
+        keep[np.cumsum(onb) - 1] = False
+        k_grp = np.repeat(gi, kept)
+        blk_last = _by_group(k_grp, np.concatenate(old_lasts)[keep],
+                             blk_grp, blk_last)
+        blk_max = _by_group(k_grp, np.concatenate(old_maxes)[keep],
+                            blk_grp, blk_max)
+    blk_offsets = pa.array(
+        np.concatenate(([0], np.cumsum(kept + nblk))).astype(np.int32))
+    columns["block_last"] = pa.ListArray.from_arrays(
+        blk_offsets, pa.array(blk_last, pa.int64()))
+    columns["block_max"] = pa.ListArray.from_arrays(
+        blk_offsets, pa.array(blk_max, pa.float64()))
+    if old is not None:
+        columns["enc_avgdl"] = pa.array(np.where(
+            kept > 0, np.minimum(np.asarray(old_enc, np.float64), avg_dl),
+            avg_dl))
+    return pa.RecordBatch.from_arrays(list(columns.values()),
+                                      names=list(columns))
 
 
 def encode_sorted_postings(sorted_rows, cfg: EngineConfig, avg_dl: float):

@@ -37,7 +37,9 @@ import functools
 import math
 import time
 
+import numpy as np
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
 from search_engine_spark.config import EngineConfig
@@ -277,7 +279,6 @@ def _with_glove_vec(spark: SparkSession, parsed: DataFrame,
     """
     from typing import Iterator
 
-    import numpy as np
     import pandas as pd
     from pyspark.sql.types import (
         ArrayType, DoubleType, IntegerType, LongType, StringType,
@@ -516,7 +517,6 @@ def build_index(
     pages: DataFrame,
     index_path: str,
     config: EngineConfig | None = None,
-    compress: bool = True,
     resume_batches: int = 4,
 ) -> dict:
     """Run the full index build; returns build metrics.
@@ -581,7 +581,6 @@ def build_index(
         "wall_sec": wall,
         "parse_sec": t_parse - t0,
         "docs_per_sec": (int(n_docs) / wall) if wall > 0 else math.inf,
-        "compressed": compress,
         "num_buckets": cfg.num_buckets,
         "stage_sec": stage_sec,
     }
@@ -601,14 +600,7 @@ def derive_index_tables(
     the expensive parse stage is never recomputed. Returns
     ``(stage_sec, n_docs, avg_dl)``.
     """
-    stage_sec: dict[str, float] = {}
-
-    def _mark(name: str, since: list) -> None:
-        now = time.time()
-        stage_sec[name] = round(now - since[0], 3)
-        since[0] = now
-
-    _t = [time.time()]
+    stage_sec, mark = _stage_timer()
 
     # ---- stage B1: corpus + doc stats -------------------------------------
     if not cat.has_table("corpus_stats"):
@@ -632,28 +624,12 @@ def derive_index_tables(
             bucket_exchange(doc_stats, cfg),
             "doc_stats", partition_by=["bucket"],
         )
-    # Topical doc-stats shard (reference doc_posting_covid analog,
-    # indexer.py:56-66,265-268, generalized to configured terms): one pass
-    # over the staged parse computes each doc's matched topics
-    # (array_intersect, JVM-side), then a join pulls the doc_stats row —
-    # the written table is partitioned by topic so a topical query prunes
-    # to its own files.
     if cfg.topical_terms and not cat.has_table("doc_stats_topical"):
-        terms_arr = F.array(*[F.lit(t) for t in cfg.topical_terms])
-        matched = parsed.select(
-            "doc_id",
-            F.explode(
-                F.array_intersect(
-                    F.transform("terms", lambda kv: kv["term"]), terms_arr
-                )
-            ).alias("topic"),
-        )
         cat.write_table(
-            matched.join(cat.read_table(spark, "doc_stats"), "doc_id"),
-            "doc_stats_topical",
-            partition_by=["topic"],
+            _topical_rows(spark, cat, parsed, cfg),
+            "doc_stats_topical", partition_by=["topic"],
         )
-    _mark("stats", _t)
+    mark("stats")
 
     # ---- stage B2: postings — ONE range shuffle + streaming encode --------
     cstats = cat.read_table(spark, "corpus_stats").collect()[0]
@@ -672,7 +648,7 @@ def derive_index_tables(
             encoded, "postings", partition_by=["bucket"],
             max_records_per_file=cfg.max_records_per_file,
         )
-    _mark("postings", _t)
+    mark("postings")
 
     # ---- stage B3: vocabulary (prune + rewrite) + term stats --------------
     # Postings carry the RAW lowercase vocabulary; pruning (df==1) and the
@@ -694,22 +670,8 @@ def derive_index_tables(
     if not cat.has_table("vocab_entities"):
         cat.write_table(entity_state(parsed), "vocab_entities")
     if not cat.has_table("term_stats"):
-        df_from_postings = (
-            cat.read_table(spark, "postings")
-            .groupBy("term")
-            .agg(F.sum("local_df").alias("df"))
-        )
-        vocab = build_vocabulary(
-            parsed, df_raw=df_from_postings,
-            capitals=cat.read_table(spark, "vocab_capitals"),
-            entity_counts=cat.read_table(spark, "vocab_entities"),
-        )
-        cat.write_table(
-            vocab.select(F.col("final_term").alias("term"), "df",
-                         F.col("term").alias("source_term")),
-            "term_stats",
-        )
-    _mark("term_stats", _t)
+        _write_term_stats(spark, cat)
+    mark("term_stats")
 
     # Stamp the on-disk layout + parse-mode so readers can validate
     # compatibility (WAND safety depends on the idf-free block_max layout;
@@ -734,22 +696,87 @@ def derive_index_tables(
         })
     else:
         _check_config_vs_properties(cfg, props)
-    # Stamped LAST: the derived tables now reflect exactly these parsed
-    # batches. A compaction replay compares this stamp against the batch
-    # list to detect tables left half-swapped by a crash (streaming/
-    # incremental.py::compact_staging).
+    _stamp_derived(cat)
+    return stage_sec, n_docs, avg_dl
+
+
+def _stage_timer():
+    """``(stage_sec, mark)``: ``mark(name)`` records under ``name`` the
+    seconds since the previous mark (or since this call)."""
+    stage_sec: dict[str, float] = {}
+    last = [time.time()]
+
+    def mark(name: str) -> None:
+        now = time.time()
+        stage_sec[name] = round(now - last[0], 3)
+        last[0] = now
+
+    return stage_sec, mark
+
+
+def _topical_rows(spark: SparkSession, cat: CatalogAdapter,
+                  parsed: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """Topical doc-stats shard rows of ``parsed`` (reference
+    doc_posting_covid analog, indexer.py:56-66,265-268, generalized to
+    configured terms): each doc's matched topics (array_intersect,
+    JVM-side) joined to its ``doc_stats`` row. The table is partitioned by
+    topic, so a topical query prunes to its own files."""
+    terms_arr = F.array(*[F.lit(t) for t in cfg.topical_terms])
+    matched = parsed.select(
+        "doc_id",
+        F.explode(
+            F.array_intersect(
+                F.transform("terms", lambda kv: kv["term"]), terms_arr
+            )
+        ).alias("topic"),
+    )
+    return matched.join(cat.read_table(spark, "doc_stats"), "doc_id")
+
+
+def _write_term_stats(spark: SparkSession, cat: CatalogAdapter) -> None:
+    """Write ``term_stats`` from the committed ``postings`` (df = sum of
+    per-(bucket, term) local_df, a (term, local_df) column scan with no
+    blob bytes read) and the persisted vocabulary states
+    (``vocab_capitals``, ``vocab_entities``)."""
+    df_from_postings = (
+        cat.read_table(spark, "postings")
+        .groupBy("term")
+        .agg(F.sum("local_df").alias("df"))
+    )
+    vocab = build_vocabulary(
+        None, df_raw=df_from_postings,
+        capitals=cat.read_table(spark, "vocab_capitals"),
+        entity_counts=cat.read_table(spark, "vocab_entities"),
+    )
+    cat.write_table(
+        vocab.select(F.col("final_term").alias("term"), "df",
+                     F.col("term").alias("source_term")),
+        "term_stats",
+    )
+
+
+def _stamp_derived(cat: CatalogAdapter) -> None:
+    """Stamped LAST: the derived tables now reflect exactly the committed
+    parsed batches. A compaction replay compares this stamp against the
+    batch list to detect tables left half-swapped by a crash
+    (streaming/incremental.py::compact_staging)."""
     cat.set_properties({
         "derived_from_batches": sorted(map(str,
                                            cat.completed_batches("parsed"))),
     })
-    return stage_sec, n_docs, avg_dl
 
 
-#: output column order of the postings table once enc_avgdl rides along
-_POSTING_MERGE_COLS = [
-    "bucket", "term", "local_df", "blob", "block_last", "block_max",
-    "enc_avgdl",
-]
+#: the postings table once enc_avgdl rides along (the fold's output)
+_POSTING_MERGE_SCHEMA = T.StructType([
+    T.StructField("bucket", T.IntegerType(), False),
+    T.StructField("term", T.StringType(), False),
+    T.StructField("local_df", T.LongType(), False),
+    T.StructField("blob", T.BinaryType(), False),
+    T.StructField("block_last", T.ArrayType(T.LongType()), False),
+    T.StructField("block_max", T.ArrayType(T.DoubleType()), False),
+    T.StructField("enc_avgdl", T.DoubleType(), False),
+])
+_POSTING_MERGE_COLS = _POSTING_MERGE_SCHEMA.names
 
 
 def merge_derive_tables(
@@ -771,7 +798,9 @@ def merge_derive_tables(
       anti-join against the fresh group keys); fresh-only groups come
       straight from the streaming encoder; groups on both sides append the
       fresh postings, since batch-monotone doc ids put every fresh id
-      above every old one (``_merge`` below holds the two kernels).
+      above every old one (``splice_pairs``: the batch encoder re-encodes
+      each old list's last block with the fresh postings and keeps the
+      earlier blocks byte for byte).
       Correctness under the avg_dl drift this implies: ``block_max`` is a
       function of the avg_dl at ENCODE time, and the tf-side BM25 factor
       grows with avg_dl by at most the ratio of the avg_dls, so every row
@@ -792,27 +821,9 @@ def merge_derive_tables(
     write. Returns ``(stage_sec, n_docs, avg_dl)`` like
     ``derive_index_tables``.
     """
-    from typing import Iterator
+    from search_engine_spark.operators.codec import encode_sorted_postings
 
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        ArrayType, BinaryType, DoubleType, IntegerType, LongType,
-        StringType, StructField, StructType,
-    )
-
-    from search_engine_spark.operators.codec import (
-        decode_posting_list, encode_sorted_postings,
-    )
-
-    stage_sec: dict[str, float] = {}
-    _t = [time.time()]
-
-    def _mark(name: str) -> None:
-        now = time.time()
-        stage_sec[name] = round(now - _t[0], 3)
-        _t[0] = now
-
+    stage_sec, mark = _stage_timer()
     fresh = (
         cat.read_table(spark, "parsed")
         .filter(F.col("batch") == batch_id)
@@ -849,24 +860,12 @@ def merge_derive_tables(
         "doc_stats", partition_by=["bucket"],
     )
     if cfg.topical_terms and cat.has_table("doc_stats_topical"):
-        terms_arr = F.array(*[F.lit(t) for t in cfg.topical_terms])
-        matched = fresh.select(
-            "doc_id",
-            F.explode(
-                F.array_intersect(
-                    F.transform("terms", lambda kv: kv["term"]), terms_arr
-                )
-            ).alias("topic"),
-        )
-        fresh_topical = matched.join(
-            cat.read_table(spark, "doc_stats"), "doc_id"
-        )
         cat.write_table(
             cat.read_table(spark, "doc_stats_topical")
-            .unionByName(fresh_topical),
+            .unionByName(_topical_rows(spark, cat, fresh, cfg)),
             "doc_stats_topical", partition_by=["topic"],
         )
-    _mark("stats")
+    mark("stats")
 
     # ---- postings: passthrough / merge / fresh-only -------------------------
     fresh_enc = encode_sorted_postings(
@@ -890,102 +889,15 @@ def merge_derive_tables(
             .join(fresh_enc.alias("f"), ["bucket", "term"])
             .select(
                 "bucket", "term",
-                F.col("o.local_df").alias("old_df"),
                 F.col("o.blob").alias("old_blob"),
                 F.col("o.block_last").alias("old_last"),
                 F.col("o.block_max").alias("old_max"),
                 F.col("o.enc_avgdl").alias("old_enc"),
-                F.col("f.local_df").alias("new_df"),
                 F.col("f.blob").alias("new_blob"),
             )
         )
-        merge_schema = StructType([
-            StructField("bucket", IntegerType(), False),
-            StructField("term", StringType(), False),
-            StructField("local_df", LongType(), False),
-            StructField("blob", BinaryType(), False),
-            StructField("block_last", ArrayType(LongType()), False),
-            StructField("block_max", ArrayType(DoubleType()), False),
-            StructField("enc_avgdl", DoubleType(), False),
-        ])
-        block_size, k, b = cfg.block_size, cfg.bm25_k, cfg.bm25_b
-        enc_avgdl = float(avg_dl)
-
-        def _merge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            # Two kernels, picked per group by the old list's block count:
-            #
-            # - splice (multi-block old list): tail-append via
-            #   codec.append_posting_blob — the old bulk is a header-adjusted
-            #   memcpy, only its final partial block decodes; work is
-            #   O(block_size + increment) no matter how hot the term.
-            # - re-encode (old list fits in one block, so a splice would
-            #   decode everything anyway): decode both sides, concatenate,
-            #   and re-encode the WHOLE batch of groups in one vectorized
-            #   pass (_encode_group_batch — the same kernel the build's
-            #   streaming encoder uses, so merged blobs are byte-identical
-            #   to a from-scratch encode of the same postings).
-            from search_engine_spark.operators.codec import (
-                _encode_group_batch, append_posting_blob,
-            )
-
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                multi = pdf["old_last"].map(len) > 1
-                big, small = pdf[multi], pdf[~multi]
-                parts = []
-                if len(small):
-                    g_ids, g_dls, g_tfs = [], [], []
-                    for r in small.itertuples(index=False):
-                        ids1, dl1, tf1 = decode_posting_list(bytes(r.old_blob))
-                        ids2, dl2, tf2 = decode_posting_list(bytes(r.new_blob))
-                        if ids1[-1] >= ids2[0]:
-                            raise ValueError(
-                                f"posting merge: new doc id {int(ids2[0])} "
-                                f"<= old last id {int(ids1[-1])}")
-                        g_ids.append(np.concatenate([ids1, ids2]))
-                        g_dls.append(np.concatenate([dl1, dl2]))
-                        g_tfs.append(np.concatenate([tf1, tf2]))
-                    lens = np.array([len(x) for x in g_ids], np.int64)
-                    ends = np.cumsum(lens)
-                    starts = ends - lens
-                    rb = _encode_group_batch(
-                        small["bucket"].to_numpy(), small["term"].tolist(),
-                        np.concatenate(g_ids), np.concatenate(g_dls),
-                        np.concatenate(g_tfs), starts, ends,
-                        block_size, enc_avgdl, k, b,
-                    )
-                    out = rb.to_pandas()
-                    out["enc_avgdl"] = enc_avgdl
-                    parts.append(out)
-                if len(big):
-                    rows: dict = {c: [] for c in (
-                        "bucket", "term", "local_df", "blob", "block_last",
-                        "block_max", "enc_avgdl")}
-                    for r in big.itertuples(index=False):
-                        ids2, dl2, tf2 = decode_posting_list(bytes(r.new_blob))
-                        blob, last, bmax = append_posting_blob(
-                            bytes(r.old_blob),
-                            np.asarray(r.old_last, np.int64),
-                            np.asarray(r.old_max, np.float64),
-                            ids2, dl2, tf2, block_size, enc_avgdl, k, b,
-                        )
-                        rows["bucket"].append(r.bucket)
-                        rows["term"].append(r.term)
-                        rows["local_df"].append(int(r.old_df) + int(r.new_df))
-                        rows["blob"].append(blob)
-                        rows["block_last"].append(last)
-                        rows["block_max"].append(bmax)
-                        # prefix bounds were computed at the OLD avg_dl, the
-                        # tail at the new one — min keeps the query-side
-                        # max(1, avg_dl_now/enc_avgdl) scaling an upper
-                        # bound for every block
-                        rows["enc_avgdl"].append(
-                            min(float(r.old_enc), enc_avgdl))
-                    parts.append(pd.DataFrame(rows))
-                yield pd.concat(parts, ignore_index=True)
-
-        merged_both = pair.mapInPandas(_merge, schema=merge_schema)
+        merged_both = pair.mapInPandas(
+            splice_pairs(cfg, avg_dl), schema=_POSTING_MERGE_SCHEMA)
         fresh_only = fresh_enc.join(
             old_post.select("bucket", "term"), ["bucket", "term"],
             "left_anti",
@@ -1012,7 +924,7 @@ def merge_derive_tables(
         )
     finally:
         fresh_enc.unpersist()
-    _mark("postings")
+    mark("postings")
 
     # ---- term_stats: df from merged postings + FOLDED vocabulary state -----
     # The A4/A5 quirk states fold associatively (min / sum), so the merge
@@ -1043,29 +955,43 @@ def merge_derive_tables(
     )
     cat.write_table(caps_new, "vocab_capitals")
     cat.write_table(ents_new, "vocab_entities")
-    df_from_postings = (
-        cat.read_table(spark, "postings")
-        .groupBy("term")
-        .agg(F.sum("local_df").alias("df"))
-    )
-    vocab = build_vocabulary(
-        None,
-        df_raw=df_from_postings,
-        capitals=cat.read_table(spark, "vocab_capitals"),
-        entity_counts=cat.read_table(spark, "vocab_entities"),
-    )
-    cat.write_table(
-        vocab.select(F.col("final_term").alias("term"), "df",
-                     F.col("term").alias("source_term")),
-        "term_stats",
-    )
-    _mark("term_stats")
+    _write_term_stats(spark, cat)
+    mark("term_stats")
 
-    cat.set_properties({
-        "derived_from_batches": sorted(map(str,
-                                           cat.completed_batches("parsed"))),
-    })
+    _stamp_derived(cat)
     return stage_sec, n_docs, avg_dl
+
+
+def splice_pairs(cfg: EngineConfig, avg_dl: float):
+    """``mapInPandas`` kernel of the fold: extend each old posting list
+    (``old_blob``/``old_last``/``old_max``/``old_enc``) by the fresh
+    postings in ``new_blob``, rows typed ``_POSTING_MERGE_SCHEMA``.
+
+    The fresh blobs decode in one batched pass; the batch encoder splices
+    each tail onto the old list's kept blocks and keeps the ``enc_avgdl``
+    rule (codec._encode_group_batch). The result is byte-identical to a
+    from-scratch encode of the concatenated list.
+    """
+    block_size, k, b = cfg.block_size, cfg.bm25_k, cfg.bm25_b
+
+    def _merge(batches):
+        from search_engine_spark.operators.codec import (
+            _encode_group_batch, decode_blobs,
+        )
+
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            ids, dls, tfs, n_new = decode_blobs(pdf["new_blob"].tolist())
+            ends = np.cumsum(n_new)
+            yield _encode_group_batch(
+                pdf["bucket"].to_numpy(), pdf["term"].tolist(),
+                ids, dls, tfs, ends - n_new, ends, block_size, avg_dl, k, b,
+                old=(pdf["old_blob"].tolist(), pdf["old_last"].tolist(),
+                     pdf["old_max"].tolist(), pdf["old_enc"].to_numpy()),
+            ).to_pandas()
+
+    return _merge
 
 
 def _check_config_vs_properties(cfg: EngineConfig, props: dict) -> None:

@@ -109,7 +109,7 @@ def assign_doc_ids(parsed: DataFrame, cfg: EngineConfig, slot: int = 0
     doc_id = slot·2^48 + monotonically_increasing_id(), with ``slot`` from
     ``index_build.next_parsed_slot``: every id of a later batch exceeds
     every id of an earlier one, so incremental posting merges are
-    tail-appends (codec.append_posting_blob). Ranking never reads the id
+    tail splices (codec._encode_group_batch). Ranking never reads the id
     (ties break on (score, warc_ts, url), like the reference's date
     tie-break, ranker.py:51-63). The in-batch id (partition << 33 | row) is
     assigned on a narrow, deterministically-partitioned chain and persisted

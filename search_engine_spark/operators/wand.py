@@ -21,16 +21,20 @@ vectorized over docID chunks:
    into each list's skip pointers — no decode), drop candidates whose bound
    is < θ, then refine survivors against each non-essential list by
    decoding only the blocks that contain a surviving candidate.
-3. θ rises as chunks complete, demoting more lists to non-essential; every
-   comparison that *excludes* a doc is strict, so score-ties at the kth
-   boundary always survive for the global timestamp tie-break.
+3. θ rises as chunks complete, demoting more lists to non-essential.
+   The running scores sum per term, not in the reference's order, so
+   they may differ from it by a few ulps: every comparison that
+   *excludes* a doc tests against θ·(1 − ``_SLACK``), so a doc whose
+   reference score ties the kth one always survives.
+4. The surviving docs are rescored by :func:`score_decoded` itself, over
+   their (cached) postings, and cut to the tie-keeping top-k: WAND returns
+   the exhaustive path's doc set and bit-identical scores.
 
 Safe only for decomposable scores, i.e. the pure-BM25 ranking mode
 (w_cosine = w_glove = 0): the reference's 0.9-weighted tf-idf cosine does
 not decompose over terms, so the combined parity mode always scores
-exhaustively. Rank-identity of BMW vs exhaustive is asserted in
-tests/test_wand.py (scores may differ by float-summation order only,
-≪ 1e-12; the reference-parity mode never goes through this path).
+exhaustively. Identity of BMW with exhaustive scoring is asserted in
+tests/test_wand.py.
 """
 
 from __future__ import annotations
@@ -39,6 +43,10 @@ import numpy as np
 
 from search_engine_spark.config import EngineConfig
 from search_engine_spark.operators.codec import decode_posting_list
+
+#: relative pruning slack: the running scores' rounding differs from the
+#: reference order by ≲ 1e-15 relative, far inside this
+_SLACK = 1e-9
 
 
 def score_decoded(
@@ -163,9 +171,10 @@ def bmw_score_lists(
     """Block-max MaxScore top-k over one shard's posting lists.
 
     Returns (doc_ids, score, matched, stats); the result set is every
-    qualifying doc whose exact score ≥ the kth best qualifying score
-    (ties kept) — exactly what exhaustive scoring + tie-keeping local top-k
-    produces. ``stats`` reports decoded vs total blocks.
+    qualifying doc whose score ≥ the kth best qualifying score (ties
+    kept), scored by ``score_decoded`` — exactly what exhaustive scoring +
+    tie-keeping local top-k produces, bit for bit. ``stats`` reports
+    decoded vs total blocks.
 
     ``cache``/``cache_rows``: an optional shared :class:`_ListCache` over a
     larger row set (multi-query batch scoring); ``cache_rows[i]`` is the
@@ -193,10 +202,10 @@ def bmw_score_lists(
     asc = np.argsort(ub, kind="stable")
     cum_ub = np.cumsum(ub[asc])
 
-    def nonessential_mask(theta: float) -> np.ndarray:
+    def nonessential_mask(cut: float) -> np.ndarray:
         mask = np.zeros(n_lists, bool)
-        if np.isfinite(theta):
-            cnt = int(np.searchsorted(cum_ub, theta, side="left"))
+        if np.isfinite(cut):
+            cnt = int(np.searchsorted(cum_ub, cut, side="left"))
             mask[asc[:cnt]] = True
         return mask
 
@@ -226,14 +235,13 @@ def bmw_score_lists(
     uppers = np.concatenate((all_last[step - 1::step], all_last[-1:]))
     uppers = np.unique(uppers)
 
-    theta = -np.inf
+    cut = -np.inf       # θ·(1 − _SLACK): a doc below it cannot reach θ
     top_docs = np.zeros(0, np.int64)
     top_scores = np.zeros(0)
-    top_matched = np.zeros(0, np.int64)
     lo = np.iinfo(np.int64).min
 
     for hi in uppers:
-        n_mask = nonessential_mask(theta)
+        n_mask = nonessential_mask(cut)
 
         # --- essential candidates + exact essential scores -----------------
         ess_parts = []
@@ -273,7 +281,7 @@ def bmw_score_lists(
             add[valid] = w * mult[t] * idf[t] * block_maxes[t][idx[valid]]
             adds[t] = add
             bound += add
-        surv = bound >= theta if np.isfinite(theta) else np.ones(len(cand), bool)
+        surv = bound >= cut
 
         # --- refine survivors against non-essential lists (targeted decode)
         for t in sorted(n_list_idx, key=lambda t: -ub[t]):
@@ -299,25 +307,35 @@ def bmw_score_lists(
                 )
                 presence[s_idx[hit]] += 1
             bound[s_idx] += exact_t - adds[t][s_idx]
-            if np.isfinite(theta):
-                surv[s_idx] = bound[s_idx] >= theta
+            surv[s_idx] = bound[s_idx] >= cut
 
         # --- fold qualifying docs into the running top-k -------------------
         qual = surv & (presence >= threshold)
         if qual.any():
             top_docs = np.concatenate((top_docs, cand[qual]))
             top_scores = np.concatenate((top_scores, bound[qual]))
-            top_matched = np.concatenate((top_matched, presence[qual]))
             if len(top_scores) >= k:
-                theta = np.partition(top_scores, -k)[-k]
+                cut = np.partition(top_scores, -k)[-k] * (1 - _SLACK)
                 if len(top_scores) > 4 * k:
-                    keep = top_scores >= theta
-                    top_docs, top_scores, top_matched = (
-                        top_docs[keep], top_scores[keep], top_matched[keep]
-                    )
+                    keep = top_scores >= cut
+                    top_docs, top_scores = top_docs[keep], top_scores[keep]
         lo = hi
 
-    if len(top_scores) >= k:
+    if len(top_scores) > k:
+        top_docs = top_docs[top_scores >= cut]
+    top_docs = np.sort(top_docs)
+    # final scores: the exhaustive scorer over the survivors' postings
+    ids_p, dl_p, tf_p = [], [], []
+    for t in range(n_lists):
+        idx = np.searchsorted(block_lasts[t], top_docs, side="left")
+        ids, dls, tfs = cachev.get(t, np.unique(idx[idx < nb[t]]))
+        hit = np.isin(ids, top_docs)
+        ids_p.append(ids[hit])
+        dl_p.append(dls[hit])
+        tf_p.append(tfs[hit])
+    top_docs, top_scores, top_matched = score_decoded(
+        ids_p, dl_p, tf_p, terms, m, avg_dl, cfg)
+    if len(top_scores) > k:
         keep = top_scores >= np.partition(top_scores, -k)[-k]
         top_docs, top_scores, top_matched = (
             top_docs[keep], top_scores[keep], top_matched[keep]

@@ -293,9 +293,6 @@ class CatalogAdapter:
         manifest["build"] = metrics
         self._commit(manifest, "finish_build")
 
-    def build_metrics(self) -> dict | None:
-        return self._load()["build"]
-
     def drop_table(self, name: str) -> None:
         """Remove one table (data + manifest entry); no-op if absent.
 

@@ -48,7 +48,7 @@ def test_roundtrip(pl, block_size):
 
     ids, dls, tfs = pl
     blob, last, bmax = encode_posting_list(
-        ids, dls, tfs, block_size, 1.0, avg_dl=100.0
+        ids, dls, tfs, block_size, avg_dl=100.0
     )
     out_ids, out_dl, out_tf = decode_posting_list(blob)
     assert np.array_equal(out_ids, ids)
@@ -69,7 +69,7 @@ def test_selected_blocks_match_slices(pl, block_size, data):
 
     ids, dls, tfs = pl
     blob, last, _ = encode_posting_list(
-        ids, dls, tfs, block_size, 1.0, avg_dl=50.0
+        ids, dls, tfs, block_size, avg_dl=50.0
     )
     n_blocks = len(last)
     picks = sorted(
@@ -102,7 +102,7 @@ def test_block_max_bounds_every_contribution(pl):
     ids, dls, tfs = pl
     block_size = 64
     _, _, bmax = encode_posting_list(
-        ids, dls, tfs, block_size, 1.0, avg_dl=123.0
+        ids, dls, tfs, block_size, avg_dl=123.0
     )
     contrib = _bm25_contribution(
         tfs.astype(np.float64), dls.astype(np.float64), 1.0, 123.0, 1.2, 0.75
@@ -131,7 +131,7 @@ def test_large_pinned_roundtrip():
     ids, dls, tfs = _pinned_large()
     for block_size in (1, 64, 128, 1024):
         blob, last, bmax = encode_posting_list(
-            ids, dls, tfs, block_size, 1.0, avg_dl=100.0
+            ids, dls, tfs, block_size, avg_dl=100.0
         )
         out_ids, out_dl, out_tf = decode_posting_list(blob)
         assert np.array_equal(out_ids, ids)
@@ -150,7 +150,7 @@ def test_large_pinned_block_max_bounds():
     ids, dls, tfs = _pinned_large(seed=13)
     block_size = 64
     _, _, bmax = encode_posting_list(
-        ids, dls, tfs, block_size, 1.0, avg_dl=123.0
+        ids, dls, tfs, block_size, avg_dl=123.0
     )
     contrib = _bm25_contribution(
         tfs.astype(np.float64), dls.astype(np.float64), 1.0, 123.0, 1.2, 0.75

@@ -19,7 +19,7 @@ def built_index(spark, tiny_corpus_path, tmp_path_factory):
     index_path = str(tmp_path_factory.mktemp("index") / "tiny")
     pages = spark.read.parquet(tiny_corpus_path)
     cfg = EngineConfig(num_buckets=4, shuffle_partitions=8)
-    metrics = build_index(spark, pages, index_path, cfg, compress=True)
+    metrics = build_index(spark, pages, index_path, cfg)
     return index_path, cfg, metrics
 
 
@@ -61,61 +61,9 @@ def test_pruning_quirks(spark, built_index, oracle):
     assert "NASDAQ" in vocab and "nasdaq" not in vocab
 
 
-def test_rank_identity(spark, built_index, oracle):
-    from search_engine_spark.operators.search import BM25SearchEngine
-
-    index_path, cfg, _ = built_index
-    engine = BM25SearchEngine(spark, index_path, cfg)
-    k = 10
-    result = engine.search_batch(FIXTURE_QUERIES, k=k).collect()
-    got = {}
-    for r in result:
-        got.setdefault(r["qid"], []).append((r["rank"], r["url"], r["score"]))
-    for qid in got:
-        got[qid].sort()
-
-    mismatches = []
-    for qid, text in FIXTURE_QUERIES:
-        expected = oracle.search(text, k=k)
-        actual = got.get(qid, [])
-        if len(expected) != len(actual):
-            mismatches.append((qid, "len", len(expected), len(actual)))
-            continue
-        for (er, eu, es, _ets), (ar, au, asc) in zip(expected, actual):
-            if er != ar or eu != au or abs(es - asc) > 1e-9:
-                mismatches.append((qid, er, (eu, es), (au, asc)))
-    assert not mismatches, f"rank-identity failures: {mismatches[:10]}"
-
-
-def test_unknown_term_empty(spark, built_index):
-    from search_engine_spark.operators.search import BM25SearchEngine
-
-    index_path, cfg, _ = built_index
-    engine = BM25SearchEngine(spark, index_path, cfg)
-    assert engine.search("qqqqunknownterm", k=5).count() == 0
-
-
-# --- stemmed mode (P18): end-to-end rank identity + format guards -----------
-
-@pytest.fixture(scope="module")
-def built_index_stemmed(spark, tiny_corpus_path, tmp_path_factory):
-    from search_engine_spark.operators.index_build import build_index
-
-    index_path = str(tmp_path_factory.mktemp("index") / "tiny_stemmed")
-    pages = spark.read.parquet(tiny_corpus_path)
-    cfg = EngineConfig(num_buckets=4, shuffle_partitions=8, stemming=True)
-    build_index(spark, pages, index_path, cfg, compress=True)
-    return index_path, cfg
-
-
-def test_stemmed_rank_identity(spark, built_index_stemmed, tiny_corpus_rows):
-    from search_engine_spark.operators.search import BM25SearchEngine
-    from tests.oracle import build_oracle
-
-    index_path, cfg = built_index_stemmed
-    oracle = build_oracle(tiny_corpus_rows, config=cfg)
-    engine = BM25SearchEngine(spark, index_path, cfg)
-    k = 10
+def _rank_mismatches(engine, oracle, k=10):
+    """Top-k of every fixture query, engine vs oracle: ranks and urls
+    exact, scores to 1e-9. Returns (mismatches, non-empty answers)."""
     result = engine.search_batch(FIXTURE_QUERIES, k=k).collect()
     got = {}
     for r in result:
@@ -135,6 +83,65 @@ def test_stemmed_rank_identity(spark, built_index_stemmed, tiny_corpus_rows):
         for (er, eu, es, _ets), (ar, au, asc) in zip(expected, actual):
             if er != ar or eu != au or abs(es - asc) > 1e-9:
                 mismatches.append((qid, er, (eu, es), (au, asc)))
+    return mismatches, n_nonempty
+
+
+def test_rank_identity(spark, built_index, oracle):
+    from search_engine_spark.operators.search import BM25SearchEngine
+
+    index_path, cfg, _ = built_index
+    engine = BM25SearchEngine(spark, index_path, cfg)
+    mismatches, _ = _rank_mismatches(engine, oracle)
+    assert not mismatches, f"rank-identity failures: {mismatches[:10]}"
+
+
+def test_pure_bm25_rank_identity(spark, built_index, tiny_corpus_rows):
+    """Pure-BM25 ranking (w_cosine = w_glove = 0), engine in auto mode —
+    which scores with block-max WAND — against the oracle."""
+    from search_engine_spark.operators.search import BM25SearchEngine
+    from tests.oracle import build_oracle
+
+    index_path, cfg, _ = built_index
+    bm25_cfg = EngineConfig(
+        num_buckets=cfg.num_buckets, shuffle_partitions=cfg.shuffle_partitions,
+        w_cosine=0.0, w_bm25=1.0, w_glove=0.0,
+    )
+    oracle = build_oracle(tiny_corpus_rows, config=bm25_cfg)
+    engine = BM25SearchEngine(spark, index_path, bm25_cfg)
+    mismatches, n_nonempty = _rank_mismatches(engine, oracle)
+    assert not mismatches, f"pure-BM25 rank-identity failures: {mismatches[:10]}"
+    assert n_nonempty > 0
+
+
+def test_unknown_term_empty(spark, built_index):
+    from search_engine_spark.operators.search import BM25SearchEngine
+
+    index_path, cfg, _ = built_index
+    engine = BM25SearchEngine(spark, index_path, cfg)
+    assert engine.search("qqqqunknownterm", k=5).count() == 0
+
+
+# --- stemmed mode (P18): end-to-end rank identity + format guards -----------
+
+@pytest.fixture(scope="module")
+def built_index_stemmed(spark, tiny_corpus_path, tmp_path_factory):
+    from search_engine_spark.operators.index_build import build_index
+
+    index_path = str(tmp_path_factory.mktemp("index") / "tiny_stemmed")
+    pages = spark.read.parquet(tiny_corpus_path)
+    cfg = EngineConfig(num_buckets=4, shuffle_partitions=8, stemming=True)
+    build_index(spark, pages, index_path, cfg)
+    return index_path, cfg
+
+
+def test_stemmed_rank_identity(spark, built_index_stemmed, tiny_corpus_rows):
+    from search_engine_spark.operators.search import BM25SearchEngine
+    from tests.oracle import build_oracle
+
+    index_path, cfg = built_index_stemmed
+    oracle = build_oracle(tiny_corpus_rows, config=cfg)
+    engine = BM25SearchEngine(spark, index_path, cfg)
+    mismatches, n_nonempty = _rank_mismatches(engine, oracle)
     assert not mismatches, f"stemmed rank-identity failures: {mismatches[:10]}"
     assert n_nonempty > 0, "stemmed gate vacuous: every query returned empty"
 

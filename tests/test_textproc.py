@@ -146,7 +146,7 @@ class TestCodecRoundTrip:
         dls = rng.integers(1, 300, 500)
         tfs = rng.integers(1, 50, 500)
         blob, last, bmax = encode_posting_list(
-            ids, dls, tfs, block_size=128, idf=1.5, avg_dl=100.0
+            ids, dls, tfs, block_size=128, avg_dl=100.0
         )
         out_ids, out_dl, out_tf = decode_posting_list(blob)
         assert (out_ids == ids).all()
@@ -166,7 +166,7 @@ class TestCodecRoundTrip:
         dls = np.full(1000, 50)
         tfs = np.arange(1000) % 9 + 1
         blob, last, bmax = encode_posting_list(
-            ids, dls, tfs, block_size=100, idf=1.0, avg_dl=50.0
+            ids, dls, tfs, block_size=100, avg_dl=50.0
         )
         got_ids, got_dl, got_tf = decode_posting_list(blob, blocks=np.array([2, 7]))
         exp = np.concatenate([ids[200:300], ids[700:800]])
@@ -185,7 +185,7 @@ class TestCodecRoundTrip:
         ids = np.sort(rng.choice(10**9, size=n, replace=False).astype(np.int64))
         dls = rng.integers(1, 200, n)
         tfs = rng.integers(1, 20, n)
-        blob, _, _ = encode_posting_list(ids, dls, tfs, 128, 0.5, 80.0)
+        blob, _, _ = encode_posting_list(ids, dls, tfs, 128, 80.0)
         out = decode_posting_list(blob)
         assert (out[0] == ids).all() and (out[1] == dls).all() and (out[2] == tfs).all()
 

@@ -4,8 +4,9 @@ The north_star requires query-side block-max WAND over the compressed
 postings. BMW is only score-safe for decomposable ranking, i.e. the
 pure-BM25 mode (w_cosine = w_glove = 0); these tests assert that
 
-1. on the fixture corpus, the BMW path returns byte-for-byte the same
-   (rank, url, score) lists as the exhaustive path for every fixture query;
+1. on the fixture corpus, the BMW path returns the same (rank, url,
+   score) lists as the exhaustive path for every fixture query, scores
+   bit for bit;
 2. on an adversarial synthetic shard (one hot + one rare term), BMW decodes
    a small fraction of the blocks while producing the exact exhaustive
    top-k.
@@ -29,7 +30,7 @@ def bm25_index(spark, tiny_corpus_path, tmp_path_factory):
     index_path = str(tmp_path_factory.mktemp("index") / "wand")
     pages = spark.read.parquet(tiny_corpus_path)
     cfg = EngineConfig(num_buckets=4, shuffle_partitions=8, **PURE_BM25)
-    build_index(spark, pages, index_path, cfg, compress=True)
+    build_index(spark, pages, index_path, cfg)
     return index_path, cfg
 
 
@@ -37,7 +38,7 @@ def _collect(df):
     got = {}
     for r in df.collect():
         got.setdefault(r["qid"], []).append(
-            (r["rank"], r["url"], round(r["score"], 12))
+            (r["rank"], r["url"], r["score"])
         )
     for qid in got:
         got[qid].sort()
@@ -116,7 +117,7 @@ def test_wand_prunes_hot_term_blocks():
     ]:
         # the index stores block_max idf-free; WAND multiplies idf in
         blob, last, bmax = encode_posting_list(
-            ids, dls, tfs, cfg.block_size, 1.0, avg_dl, cfg.bm25_k, cfg.bm25_b
+            ids, dls, tfs, cfg.block_size, avg_dl, cfg.bm25_k, cfg.bm25_b
         )
         blobs[t], lasts[t], maxes[t] = blob, last, bmax
 
@@ -160,7 +161,7 @@ def test_shared_cache_dedups_block_decodes():
     dls = rng.randint(40, 160, size=len(ids)).astype(np.int64)
     tfs = rng.randint(1, 5, size=len(ids)).astype(np.int64)
     blob, last, bmax = encode_posting_list(
-        ids, dls, tfs, cfg.block_size, 1.0, avg_dl, cfg.bm25_k, cfg.bm25_b
+        ids, dls, tfs, cfg.block_size, avg_dl, cfg.bm25_k, cfg.bm25_b
     )
     df = {"hot": len(ids)}
     shared = _ListCache([blob], [last])
@@ -175,3 +176,47 @@ def test_shared_cache_dedups_block_decodes():
     # both queries decode everything (single-list → no pruning), but the
     # shared cache holds each block once
     assert shared.decoded_blocks <= n_blocks
+
+
+@pytest.mark.parametrize("seed", range(6))
+def test_bmw_scores_bit_identical_to_exhaustive(seed):
+    """On random lists, bmw_score_lists returns exactly the tie-keeping
+    top-k of score_decoded: the same doc set, bit-identical scores and
+    match counts. Small tf/dl ranges make exact score ties common, and a
+    repeated query term weighs one list twice."""
+    from search_engine_spark.operators.codec import encode_posting_list
+    from search_engine_spark.operators.wand import bmw_score_lists, score_decoded
+
+    cfg = EngineConfig(block_size=16, **PURE_BM25)
+    rng = np.random.RandomState(seed)
+    n_docs, avg_dl = 3000, 97.3
+    doc_dl = rng.choice([40, 70, 100, 130], size=n_docs).astype(np.int64)
+    terms = ["t0", "t1", "t2", "t3", "t4"]
+    lists = {}
+    for t, df in zip(terms, (900, 400, 250, 120, 60)):
+        ids = np.sort(rng.choice(n_docs, size=df, replace=False)).astype(
+            np.int64)
+        lists[t] = (ids, doc_dl[ids], rng.randint(1, 4, size=df).astype(
+            np.int64))
+    tokens = ["t0", "t1", "t2", "t1", "t3", "t4"]
+    qmeta = _make_qmeta({t: len(v[0]) for t, v in lists.items()}, n_docs,
+                        tokens, cfg)
+    enc = {t: encode_posting_list(ids, dls, tfs, cfg.block_size, avg_dl,
+                                  cfg.bm25_k, cfg.bm25_b)
+           for t, (ids, dls, tfs) in lists.items()}
+
+    e_cand, e_score, e_matched = score_decoded(
+        [lists[t][0] for t in terms], [lists[t][1] for t in terms],
+        [lists[t][2] for t in terms], terms, qmeta, avg_dl, cfg,
+    )
+    for k in (1, 5, 10, 40):
+        kth = np.partition(e_score, -k)[-k]
+        top = e_score >= kth
+        expected = set(zip(e_cand[top].tolist(), e_score[top].tolist(),
+                           e_matched[top].tolist()))
+        cand, score, matched, _ = bmw_score_lists(
+            terms, [enc[t][0] for t in terms], [enc[t][1] for t in terms],
+            [enc[t][2] for t in terms], qmeta, avg_dl, cfg, k,
+        )
+        got = set(zip(cand.tolist(), score.tolist(), matched.tolist()))
+        assert got == expected, (k, sorted(got ^ expected)[:6])
