@@ -3,7 +3,7 @@
 
     spark-submit --master <cluster> --py-files engine.zip \
         scripts/run_queries.py --index-path /path/to/index \
-        [--queries queries.txt] [--k 10] [--csv results.csv] [--wand auto]
+        [--queries queries.txt] [--k 10] [--csv results.csv] [--bm25-only]
 
 ``--queries`` is a newline-delimited file (reference
 search_engine.py:121-133 semantics); without it the 25-query fixture set
@@ -27,10 +27,9 @@ def main() -> None:
     ap.add_argument("--queries", default=None)
     ap.add_argument("--k", type=int, default=10)
     ap.add_argument("--csv", default=None)
-    ap.add_argument("--wand", choices=["auto", "on", "off"], default="auto")
     ap.add_argument(
         "--bm25-only", action="store_true",
-        help="pure-BM25 ranking (w_cosine=0, w_bm25=1) — enables WAND pruning",
+        help="pure-BM25 ranking (w_cosine=0, w_bm25=1)",
     )
     ap.add_argument("--glove", default=None)
     args = ap.parse_args()
@@ -62,10 +61,9 @@ def main() -> None:
 
         queries = FIXTURE_QUERIES
 
-    use_wand = {"auto": None, "on": True, "off": False}[args.wand]
     engine = BM25SearchEngine(spark, args.index_path, cfg)
     rows = (
-        engine.search_batch(queries, k=args.k, use_wand=use_wand)
+        engine.search_batch(queries, k=args.k)
         .orderBy("qid", "rank")
         .collect()
     )

@@ -24,8 +24,9 @@ class EngineConfig:
     #: At 100 TB scale set ~ n_docs / 2M; for local tests a small number.
     num_buckets: int = 8
 
-    #: docs per compressed posting block (per-block max-score metadata is
-    #: kept at this granularity for block-max WAND pruning).
+    #: docs per compressed posting block. Every block restarts its id
+    #: deltas, so a fold decodes and re-encodes only each touched list's
+    #: last block: this bounds the fold's splice work per list.
     block_size: int = 128
 
     #: cap on rows per output file, the Spark analog of the reference's 4M

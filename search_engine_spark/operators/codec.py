@@ -4,23 +4,23 @@ Each posting list is stored as one binary blob of fixed-size blocks
 (``EngineConfig.block_size`` docs). Within a block, doc ids are encoded as a
 zigzag-encoded absolute first value followed by positive gaps; doc lengths
 and term frequencies are plain varbyte streams. Every block is independently
-decodable (its byte offsets are in the blob header), and two side columns —
-``block_last`` (skip pointers) and ``block_max`` (upper bound of this term's
-BM25 contribution for any doc in the block, with the reference's nonstandard
-tf = tf/dl normalization and idf = log10(N/df), searcher.py:113-136,
-ranker.py:91-102) — enable block-max WAND pruning without decoding.
+decodable (its byte offsets are in the blob header). A blob is a pure
+function of its (doc_id, doc_length, tf) rows and the block size: it
+depends on no corpus statistic, so a list that gains no docs never needs
+re-encoding.
 
 Replaces the reference's pickle posting files (utils.py:14-51,
 indexer.py:89-116); the varbyte/delta layout follows the standard IR
 literature (e.g. Manning et al., IIR ch.5).
 
-One writer: ``_encode_group_batch`` is the only code that builds a blob,
-its header and its side columns. The build's streaming encoder
+One writer: ``_encode_group_batch`` is the only code that builds a blob
+and its header. The build's streaming encoder
 (``encode_sorted_postings``) feeds it whole groups; the fold
 (index_build.merge_derive_tables) feeds it fresh postings plus the old
 blobs they extend, and it splices the new tail onto each old list's kept
 blocks. ``encode_posting_list`` is a one-group call into it. One reader:
-``_decode_blocks`` decodes any set of (blob, block) pairs in one pass.
+``_decode_blocks`` decodes any set of (blob, block) pairs in one pass;
+``decode_blobs`` is its every-block entry point.
 
 Everything is vectorized numpy — no per-int Python in the hot path.
 
@@ -38,16 +38,6 @@ from __future__ import annotations
 import numpy as np
 
 from search_engine_spark.config import EngineConfig
-
-#: On-disk posting format version, stamped into the index manifest at build
-#: time. Version 2 = idf-FREE ``block_max`` (tf-side factor only; the query
-#: side multiplies idf in when computing WAND bounds) and no per-row df
-#: column. An index whose manifest predates this layout (or lacks the stamp)
-#: must NOT be used with block-max WAND — the bounds would get idf applied
-#: twice, silently under-estimating for idf < 1 and pruning valid top-k
-#: docs. ``BM25SearchEngine`` enforces this (falls back to exhaustive
-#: scoring / refuses an explicit use_wand=True).
-CODEC_FORMAT_VERSION = 2
 
 _HDR = np.dtype("<u4")
 
@@ -114,40 +104,20 @@ def vb_decode(stream: np.ndarray) -> np.ndarray:
     return np.add.reduceat(contrib, starts).astype(np.uint64)
 
 
-def _bm25_contribution(
-    tf: np.ndarray, dl: np.ndarray, idf: float, avg_dl: float, k: float, b: float
-) -> np.ndarray:
-    """The reference's per-position BM25 term contribution (ranker.py:96-100)
-    with its nonstandard tf = tf_count/doc_length (searcher.py:113-124)."""
-    tfn = tf / dl
-    return (idf * tfn * (k + 1)) / (tfn + k * (1 - b + b * (dl / avg_dl)))
-
-
 def encode_posting_list(
     doc_ids: np.ndarray,
     doc_lengths: np.ndarray,
     tfs: np.ndarray,
     block_size: int,
-    avg_dl: float,
-    k: float = 1.2,
-    b: float = 0.75,
-) -> tuple[bytes, np.ndarray, np.ndarray]:
-    """Encode one sorted posting list: a one-group call into
-    ``_encode_group_batch``, for tests and tools.
-
-    Returns (blob, block_last_docid[int64], block_max_score[float64]).
-    """
-    n = len(doc_ids)
+) -> bytes:
+    """Encode one sorted posting list into its blob: a one-group call into
+    ``_encode_group_batch``, for tests and tools."""
     rb = _encode_group_batch(
         np.zeros(1, np.int64), [""], np.asarray(doc_ids, np.int64),
         np.asarray(doc_lengths), np.asarray(tfs), np.array([0]),
-        np.array([n]), block_size, avg_dl, k, b,
+        np.array([len(doc_ids)]), block_size,
     )
-    return (
-        rb.column("blob")[0].as_py(),
-        rb.column("block_last")[0].values.to_numpy(),
-        rb.column("block_max")[0].values.to_numpy(),
-    )
+    return rb.column("blob")[0].as_py()
 
 
 def _u32_at(buf: np.ndarray, pos: np.ndarray) -> np.ndarray:
@@ -207,21 +177,6 @@ def _decode_blocks(buf, base, hdr, g: np.ndarray, blk: np.ndarray):
     return ids, dls.astype(np.int64), tfs.astype(np.int64), counts
 
 
-def decode_posting_list(
-    blob: bytes, blocks: np.ndarray | None = None
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode (all or selected blocks of) a blob → (doc_ids, dls, tfs).
-
-    ``blocks``: sorted block indices to decode (None → all). Selected-block
-    decode reads only those byte ranges — this is what WAND skipping uses.
-    """
-    buf, base, hdr = _blob_headers([blob])
-    blk = (np.arange(hdr[0, 2]) if blocks is None
-           else np.asarray(blocks, np.int64))
-    return _decode_blocks(buf, base, hdr, np.zeros(len(blk), np.int64),
-                          blk)[:3]
-
-
 def decode_blobs(blobs: list[bytes]):
     """Decode every block of every blob in one pass →
     (doc_ids, dls, tfs, postings per blob), postings in blob order."""
@@ -247,12 +202,12 @@ def _by_group(group_a, a, group_b, b):
 
 
 def _encode_group_batch(
-    gbuckets, gterms, ids, dls, tfs, starts, ends,
-    block_size: int, avg_dl: float, k: float, b: float, old=None,
+    gbuckets, gterms, ids, dls, tfs, starts, ends, block_size: int,
+    old=None,
 ):
     """Write the posting blobs of every (closed) group of one batch in a
-    single vectorized pass: the only code that builds a blob, its header
-    and its ``block_last``/``block_max``.
+    single vectorized pass: the only code that builds a blob and its
+    header.
 
     ``gbuckets``/``gterms`` are per-group (length G); ``ids``/``dls``/``tfs``
     are the flat row arrays; ``starts``/``ends`` delimit each group's
@@ -260,25 +215,19 @@ def _encode_group_batch(
     varbyte-encoded with ONE ``vb_encode`` per stream; per-group blobs are
     then assembled from cumulative-byte-position slices.
 
-    ``old`` — the fold's tail splice: per group, the encoded list the rows
-    extend, as ``(blobs, block_lasts, block_maxes, enc_avgdls)``. Every
-    row id must exceed its old list's last id (batch-monotone ids,
-    parse.assign_doc_ids), else ValueError. Only each old list's LAST
-    block is decoded; its rows go in front of the group's rows and are
-    re-encoded with them. The earlier blocks are kept byte for byte:
-    every block restarts with an absolute id, so their offsets, stream
-    bytes, ``block_last`` and ``block_max`` go in front of the new tail
-    unchanged. Blocks stay aligned to multiples of ``block_size``, so the
-    blob equals a from-scratch encode of the whole list (at equal
-    avg_dl). Work per group is O(block_size + new rows), however long the
-    old list. The output gains ``enc_avgdl``: kept blocks carry bounds
-    computed at the old encode's avg_dl, so a group that keeps any gets
-    min(old, avg_dl) — the query side's max(1, avg_dl_now/enc_avgdl)
-    scaling then bounds every block — and a group that keeps none gets
-    avg_dl.
+    ``old`` — the fold's tail splice: per group, the blob of the encoded
+    list the rows extend. Every row id must exceed its old list's last id
+    (batch-monotone ids, parse.assign_doc_ids), else ValueError. Only
+    each old list's LAST block is decoded; its rows go in front of the
+    group's rows and are re-encoded with them. The earlier blocks are
+    kept byte for byte: every block restarts with an absolute id, so
+    their offsets and stream bytes go in front of the new tail unchanged.
+    Blocks stay aligned to multiples of ``block_size``, so the blob equals
+    a from-scratch encode of the whole list. Work per group is
+    O(block_size + new rows), however long the old list.
 
     Returns an Arrow RecordBatch of encoded rows: bucket, term, local_df,
-    blob, block_last, block_max, plus ``enc_avgdl`` when ``old`` is given.
+    blob.
     """
     import pyarrow as pa
 
@@ -292,8 +241,7 @@ def _encode_group_batch(
     prefix = [_NO_PREFIX] * G
 
     if old is not None:
-        old_blobs, old_lasts, old_maxes, old_enc = old
-        buf, base, hdr = _blob_headers(old_blobs)
+        buf, base, hdr = _blob_headers(old)
         if (hdr[:, 1] != block_size).any():
             raise ValueError(
                 f"block_size mismatch: blob={int(hdr[0, 1])} "
@@ -327,7 +275,7 @@ def _encode_group_batch(
             tuple(blob[o:o + 4 * p] for o in ob_g)
             + tuple(blob[s:s + c] for s, c in zip(sb_g, cut_g))
             for blob, ob_g, sb_g, cut_g, p in zip(
-                old_blobs, ob.tolist(), sb.tolist(), cut.tolist(),
+                old, ob.tolist(), sb.tolist(), cut.tolist(),
                 kept.tolist())
         ]
 
@@ -337,7 +285,6 @@ def _encode_group_batch(
     nblk_excl = np.concatenate(([0], np.cumsum(nblk)))
     blk_in_grp = np.arange(int(nblk_excl[-1])) - nblk_excl[blk_grp]
     bstart = starts[blk_grp] + blk_in_grp * block_size
-    bend = np.minimum(bstart + block_size, ends[blk_grp])
 
     # gap values: per-row deltas, with the absolute (zigzag) restart value at
     # every block start; cross-group diff garbage is overwritten because
@@ -356,12 +303,6 @@ def _encode_group_batch(
         offs.append(memoryview((pos[bstart] - pos[starts[blk_grp]]
                                 + cut[blk_grp, s]).astype("<u4").tobytes()))
         slen.append(cut[:, s] + pos[ends] - pos[starts])
-
-    contrib = _bm25_contribution(
-        tfs.astype(np.float64), dls.astype(np.float64), 1.0, avg_dl, k, b
-    )
-    blk_max = np.maximum.reduceat(contrib, bstart)
-    blk_last = ids[bend - 1]
 
     headers = np.empty((G, 6), "<u4")
     headers[:, 0] = kept * block_size + grp_len
@@ -383,36 +324,15 @@ def _encode_group_batch(
             p[4], dl_s[dl_pos[r0]:dl_pos[r1]],
             p[5], tf_s[tf_pos[r0]:tf_pos[r1]],
         )))
-    columns = {
-        "bucket": pa.array(np.asarray(gbuckets, np.int32)),
-        "term": pa.array(list(gterms), pa.string()),
-        "local_df": pa.array(headers[:, 0].astype(np.int64)),
-        "blob": pa.array(blobs, pa.binary()),
-    }
-    if old is not None:
-        # each old list's last block was re-encoded into the tail
-        keep = np.ones(int(onb.sum()), bool)
-        keep[np.cumsum(onb) - 1] = False
-        k_grp = np.repeat(gi, kept)
-        blk_last = _by_group(k_grp, np.concatenate(old_lasts)[keep],
-                             blk_grp, blk_last)
-        blk_max = _by_group(k_grp, np.concatenate(old_maxes)[keep],
-                            blk_grp, blk_max)
-    blk_offsets = pa.array(
-        np.concatenate(([0], np.cumsum(kept + nblk))).astype(np.int32))
-    columns["block_last"] = pa.ListArray.from_arrays(
-        blk_offsets, pa.array(blk_last, pa.int64()))
-    columns["block_max"] = pa.ListArray.from_arrays(
-        blk_offsets, pa.array(blk_max, pa.float64()))
-    if old is not None:
-        columns["enc_avgdl"] = pa.array(np.where(
-            kept > 0, np.minimum(np.asarray(old_enc, np.float64), avg_dl),
-            avg_dl))
-    return pa.RecordBatch.from_arrays(list(columns.values()),
-                                      names=list(columns))
+    return pa.RecordBatch.from_arrays(
+        [pa.array(np.asarray(gbuckets, np.int32)),
+         pa.array(list(gterms), pa.string()),
+         pa.array(headers[:, 0].astype(np.int64)),
+         pa.array(blobs, pa.binary())],
+        names=["bucket", "term", "local_df", "blob"])
 
 
-def encode_sorted_postings(sorted_rows, cfg: EngineConfig, avg_dl: float):
+def encode_sorted_postings(sorted_rows, cfg: EngineConfig):
     """Streaming group encoder over range-partitioned, sorted posting rows.
 
     Input: (bucket, term, doc_id, doc_length, tf) rows, range-partitioned
@@ -425,16 +345,10 @@ def encode_sorted_postings(sorted_rows, cfg: EngineConfig, avg_dl: float):
     per-posting Python objects — this IS the reference's external k-way
     merge (indexer.py:118-206) re-expressed as Spark's range shuffle plus
     a single streaming pass.
-
-    ``block_max`` is stored idf-FREE (the tf-side factor
-    tfn·(k+1)/(tfn + k·(1−b+b·dl/avgdl)) only): idf = log10(N/df) is a
-    per-term constant, so the query side multiplies it in when computing
-    WAND bounds. Decoupling the encoder from global df removes the
-    vocabulary join from the build's hot path entirely.
     """
     from pyspark.sql.types import (
-        ArrayType, BinaryType, DoubleType, IntegerType, LongType,
-        StringType, StructField, StructType,
+        BinaryType, IntegerType, LongType, StringType, StructField,
+        StructType,
     )
 
     schema = StructType(
@@ -443,12 +357,9 @@ def encode_sorted_postings(sorted_rows, cfg: EngineConfig, avg_dl: float):
             StructField("term", StringType(), False),
             StructField("local_df", LongType(), False),
             StructField("blob", BinaryType(), False),
-            StructField("block_last", ArrayType(LongType()), False),
-            StructField("block_max", ArrayType(DoubleType()), False),
         ]
     )
     block_size = cfg.block_size
-    k, b = cfg.bm25_k, cfg.bm25_b
 
     def fn(batches):
         import pyarrow as pa
@@ -507,7 +418,7 @@ def encode_sorted_postings(sorted_rows, cfg: EngineConfig, avg_dl: float):
                 continue
             yield _encode_group_batch(
                 gbuckets[:g_last], gterms[:g_last], ids, dls, tfs,
-                starts[:g_last], ends[:g_last], block_size, avg_dl, k, b,
+                starts[:g_last], ends[:g_last], block_size,
             )
 
         if carry is not None:
@@ -515,7 +426,7 @@ def encode_sorted_postings(sorted_rows, cfg: EngineConfig, avg_dl: float):
             yield _encode_group_batch(
                 np.array([carry[0]]), [carry[1]],
                 carry[2], carry[3], carry[4],
-                np.array([0]), np.array([nc]), block_size, avg_dl, k, b,
+                np.array([0]), np.array([nc]), block_size,
             )
 
     return sorted_rows.select(

@@ -639,9 +639,7 @@ def derive_index_tables(
     if not cat.has_table("postings"):
         from search_engine_spark.operators.codec import encode_sorted_postings
 
-        encoded = encode_sorted_postings(
-            sorted_posting_rows(parsed, cfg), cfg, avg_dl
-        )
+        encoded = encode_sorted_postings(sorted_posting_rows(parsed, cfg), cfg)
         # range partitioning already clusters by bucket → the partitioned
         # write needs no extra repartition
         cat.write_table(
@@ -673,19 +671,16 @@ def derive_index_tables(
         _write_term_stats(spark, cat)
     mark("term_stats")
 
-    # Stamp the on-disk layout + parse-mode so readers can validate
-    # compatibility (WAND safety depends on the idf-free block_max layout;
-    # query-side tokenization must match the build's stemming mode).
-    # Stamped ONCE, on the initial build: a re-derive (streaming
-    # compaction) must run under the stamped semantics, never re-stamp —
-    # re-stamping from a default config would silently flip e.g. the
-    # stemming flag and make queries tokenize against the wrong vocabulary.
-    from search_engine_spark.operators.codec import CODEC_FORMAT_VERSION
-
+    # Stamp the build semantics so readers can validate compatibility
+    # (query-side tokenization must match the build's stemming mode).
+    # Stamped ONCE, on the initial build (no ``num_buckets`` stamp yet): a
+    # re-derive (streaming compaction) must run under the stamped
+    # semantics, never re-stamp — re-stamping from a default config would
+    # silently flip e.g. the stemming flag and make queries tokenize
+    # against the wrong vocabulary.
     props = cat.properties()
-    if "codec_format" not in props:
+    if "num_buckets" not in props:
         cat.set_properties({
-            "codec_format": CODEC_FORMAT_VERSION,
             "stemming": bool(cfg.stemming),
             "topical_terms": list(cfg.topical_terms),
             "glove_path": cfg.glove_path,
@@ -766,15 +761,12 @@ def _stamp_derived(cat: CatalogAdapter) -> None:
     })
 
 
-#: the postings table once enc_avgdl rides along (the fold's output)
+#: the postings table's rows (the fold's output)
 _POSTING_MERGE_SCHEMA = T.StructType([
     T.StructField("bucket", T.IntegerType(), False),
     T.StructField("term", T.StringType(), False),
     T.StructField("local_df", T.LongType(), False),
     T.StructField("blob", T.BinaryType(), False),
-    T.StructField("block_last", T.ArrayType(T.LongType()), False),
-    T.StructField("block_max", T.ArrayType(T.DoubleType()), False),
-    T.StructField("enc_avgdl", T.DoubleType(), False),
 ])
 _POSTING_MERGE_COLS = _POSTING_MERGE_SCHEMA.names
 
@@ -800,14 +792,9 @@ def merge_derive_tables(
       fresh postings, since batch-monotone doc ids put every fresh id
       above every old one (``splice_pairs``: the batch encoder re-encodes
       each old list's last block with the fresh postings and keeps the
-      earlier blocks byte for byte).
-      Correctness under the avg_dl drift this implies: ``block_max`` is a
-      function of the avg_dl at ENCODE time, and the tf-side BM25 factor
-      grows with avg_dl by at most the ratio of the avg_dls, so every row
-      carries ``enc_avgdl`` and the query loader scales the bounds by
-      max(1, avg_dl_now/enc_avgdl) (operators/search.py) — bounds stay
-      upper bounds, WAND stays exact, and untouched rows never need
-      re-encoding.
+      earlier blocks byte for byte). A blob depends only on its
+      (doc_id, doc_length, tf) rows, never on avg_dl, so the untouched
+      rows stay valid however far the increment moves the corpus stats.
     - ``term_stats`` — df re-aggregates from the merged postings (a
       (term, local_df) column scan); the persisted vocabulary states
       (``vocab_capitals`` AND, ``vocab_entities`` sum) fold in the fresh
@@ -832,7 +819,6 @@ def merge_derive_tables(
 
     # ---- corpus_stats: additive fold ---------------------------------------
     old_stats = cat.read_table(spark, "corpus_stats").collect()[0]
-    old_avg_dl = float(old_stats["avg_doc_length"])
     inc = fresh.agg(
         F.count("*").alias("n"), F.sum("doc_length").alias("s")
     ).collect()[0]
@@ -868,16 +854,10 @@ def merge_derive_tables(
     mark("stats")
 
     # ---- postings: passthrough / merge / fresh-only -------------------------
-    fresh_enc = encode_sorted_postings(
-        sorted_posting_rows(fresh, cfg), cfg, avg_dl
-    ).withColumn("enc_avgdl", F.lit(float(avg_dl)))
+    fresh_enc = encode_sorted_postings(sorted_posting_rows(fresh, cfg), cfg)
     fresh_enc.persist()
     try:
         old_post = cat.read_table(spark, "postings")
-        if "enc_avgdl" not in old_post.columns:
-            # rows from a full (re)build were all encoded at the avg_dl
-            # recorded by that build's corpus_stats
-            old_post = old_post.withColumn("enc_avgdl", F.lit(old_avg_dl))
         # broadcast the fresh group keys: the blob-carrying old table must
         # not shuffle just to find out which rows pass through untouched
         # (at cluster scale AQE demotes this to a shuffled hash join when
@@ -890,14 +870,11 @@ def merge_derive_tables(
             .select(
                 "bucket", "term",
                 F.col("o.blob").alias("old_blob"),
-                F.col("o.block_last").alias("old_last"),
-                F.col("o.block_max").alias("old_max"),
-                F.col("o.enc_avgdl").alias("old_enc"),
                 F.col("f.blob").alias("new_blob"),
             )
         )
         merged_both = pair.mapInPandas(
-            splice_pairs(cfg, avg_dl), schema=_POSTING_MERGE_SCHEMA)
+            splice_pairs(cfg), schema=_POSTING_MERGE_SCHEMA)
         fresh_only = fresh_enc.join(
             old_post.select("bucket", "term"), ["bucket", "term"],
             "left_anti",
@@ -962,17 +939,17 @@ def merge_derive_tables(
     return stage_sec, n_docs, avg_dl
 
 
-def splice_pairs(cfg: EngineConfig, avg_dl: float):
+def splice_pairs(cfg: EngineConfig):
     """``mapInPandas`` kernel of the fold: extend each old posting list
-    (``old_blob``/``old_last``/``old_max``/``old_enc``) by the fresh
-    postings in ``new_blob``, rows typed ``_POSTING_MERGE_SCHEMA``.
+    (``old_blob``) by the fresh postings in ``new_blob``, rows typed
+    ``_POSTING_MERGE_SCHEMA``.
 
     The fresh blobs decode in one batched pass; the batch encoder splices
-    each tail onto the old list's kept blocks and keeps the ``enc_avgdl``
-    rule (codec._encode_group_batch). The result is byte-identical to a
-    from-scratch encode of the concatenated list.
+    each tail onto the old list's kept blocks (codec._encode_group_batch).
+    The result is byte-identical to a from-scratch encode of the
+    concatenated list.
     """
-    block_size, k, b = cfg.block_size, cfg.bm25_k, cfg.bm25_b
+    block_size = cfg.block_size
 
     def _merge(batches):
         from search_engine_spark.operators.codec import (
@@ -986,9 +963,8 @@ def splice_pairs(cfg: EngineConfig, avg_dl: float):
             ends = np.cumsum(n_new)
             yield _encode_group_batch(
                 pdf["bucket"].to_numpy(), pdf["term"].tolist(),
-                ids, dls, tfs, ends - n_new, ends, block_size, avg_dl, k, b,
-                old=(pdf["old_blob"].tolist(), pdf["old_last"].tolist(),
-                     pdf["old_max"].tolist(), pdf["old_enc"].to_numpy()),
+                ids, dls, tfs, ends - n_new, ends, block_size,
+                old=pdf["old_blob"].tolist(),
             ).to_pandas()
 
     return _merge

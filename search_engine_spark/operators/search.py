@@ -8,13 +8,14 @@ searcher.py:22-136, ranker.py:17-109):
 - the tiny query-term relation is broadcast against the postings table
   (J1/J2 as a broadcast hash join — posting row-group pruning on the sorted
   ``term`` column skips non-matching parquet pages);
-- candidate generation + scoring run partition-parallel per (query, bucket)
-  shard: decode blobs, document-at-a-time merge, min-match prune
-  (int(0.35·|q|), searcher.py:67-68), vectorized scoring with the
+- candidate generation + scoring run partition-parallel per bucket: one
+  vectorized decode of every matched blob of the bucket, then per query a
+  document-at-a-time merge, min-match prune (int(0.35·|q|),
+  searcher.py:67-68) and vectorized scoring of every candidate with the
   reference's exact formulas (nonstandard BM25 ranker.py:91-102, weighted
-  tf-idf cosine ranker.py:80); in the pure-BM25 ranking mode the shard pass
-  uses block-max WAND (operators/wand.py) and decodes only the blocks whose
-  upper bound can reach the running top-k;
+  tf-idf cosine ranker.py:80). Like the reference, the scorer ranks every
+  candidate it loads: the pure-BM25 mode (w_cosine = w_glove = 0) takes
+  the same path with zero weights;
 - optional GloVe-style embedding component (reference ranker.py:78,
   search_engine.py:13-23 — made optional here): per-doc mean vector from
   ``doc_stats.glove_vec``, query vector driver-side, cosine added after the
@@ -90,14 +91,91 @@ def _build_query_meta(queries, cfg: EngineConfig, term_df: dict[str, int],
     return meta
 
 
+def score_decoded(
+    ids_parts: list[np.ndarray],
+    dl_parts: list[np.ndarray],
+    tf_parts: list[np.ndarray],
+    term_parts: list[str],
+    qmeta_entry: dict,
+    avg_dl: float,
+    cfg: EngineConfig,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Exhaustively score decoded postings → (doc_ids, score, matched).
+
+    The scoring replicates the reference ranker exactly (SURVEY.md §2.6):
+    per-position tf-idf matrix, weighted cosine + nonstandard BM25, with
+    duplicate query terms scoring once per position (ranker.py:96-100).
+    """
+    m = qmeta_entry
+    n_q, threshold = m["n"], m["threshold"]
+    idf_row, q_row0, positions = m["idf_row"], m["q_row0"], m["positions"]
+    empty = (np.zeros(0, np.int64), np.zeros(0), np.zeros(0, np.int64))
+    if not ids_parts:
+        return empty
+
+    all_ids = np.concatenate(ids_parts)
+    if len(all_ids) == 0:
+        return empty
+    unique_ids, inverse = np.unique(all_ids, return_inverse=True)
+    matched = np.bincount(inverse, minlength=len(unique_ids))
+    keep = matched >= threshold
+    if not keep.any():
+        return empty
+
+    n_u = len(unique_ids)
+    M = np.zeros((n_u, n_q))        # tf = tf_count/doc_length per position
+    dl_u = np.zeros(n_u)
+    off = 0
+    for t_i, term in enumerate(term_parts):
+        ids = ids_parts[t_i]
+        rows = inverse[off:off + len(ids)]
+        off += len(ids)
+        if len(ids) == 0:
+            continue
+        tfn = tf_parts[t_i] / dl_parts[t_i]
+        for p in positions[term]:
+            M[rows, p] = tfn
+        dl_u[rows] = dl_parts[t_i]
+
+    M = M[keep]
+    dl_u = dl_u[keep]
+    cand_ids = unique_ids[keep]
+    cand_matched = matched[keep]
+
+    # nonstandard BM25 summed over query positions (ranker.py:91-102)
+    bm = (
+        (idf_row * M * (cfg.bm25_k + 1))
+        / (M + cfg.bm25_k * (1 - cfg.bm25_b + cfg.bm25_b * (dl_u[:, None] / avg_dl)))
+    ).sum(axis=1)
+    score = cfg.w_bm25 * bm
+
+    if cfg.w_cosine != 0.0:
+        # weighted tf-idf cosine (ranker.py:80,104-109)
+        doc_w = M * idf_row
+        q_w = q_row0 * idf_row
+        dots = doc_w @ q_w
+        denom = np.sqrt((doc_w * doc_w).sum(axis=1)) * np.sqrt((q_w * q_w).sum())
+        cos = np.where(
+            (denom == 0) | (dots == 0),
+            0.0,
+            np.divide(dots, denom, out=np.zeros_like(dots), where=denom != 0),
+        )
+        score = score + cfg.w_cosine * cos
+
+    return cand_ids, score, cand_matched
+
+
 def _make_scorer(qmeta: dict, avg_dl: float, cfg: EngineConfig, k: int,
-                 use_wand: bool, topk_margin: float):
+                 topk_margin: float):
     """applyInPandas scorer for one bucket's matched posting rows.
 
     The group key is the BUCKET alone: every query in the batch scores
-    against the same decoded rows, so a posting list matched by several
-    queries is decoded once (shared block cache in the WAND path) and the
-    job schedules |buckets| groups instead of |queries|·|buckets|.
+    against the same decoded rows, and the job schedules |buckets| groups
+    instead of |queries|·|buckets|. The group's blobs decode in ONE
+    ``codec.decode_blobs`` pass; every row belongs to some query's terms
+    (the scan keeps only the batch's known terms), so nothing decodes for
+    nothing, and a list matched by several queries decodes once.
+    ``score_decoded`` then runs once per query over its terms' slices.
 
     ``topk_margin`` widens the tie-keeping local top-k boundary: with the
     embedding component enabled the final score shifts by at most ±w_glove,
@@ -106,58 +184,25 @@ def _make_scorer(qmeta: dict, avg_dl: float, cfg: EngineConfig, k: int,
     """
 
     def score_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        from search_engine_spark.operators.codec import decode_posting_list
-        from search_engine_spark.operators.wand import (
-            _ListCache, bmw_score_lists, score_decoded,
-        )
+        from search_engine_spark.operators.codec import decode_blobs
 
         empty = pd.DataFrame(columns=["qid", "doc_id", "score", "matched"])
         if not len(pdf):
             return empty
 
-        terms = [r.term for r in pdf.itertuples(index=False)]
-        blobs = [bytes(r.blob) for r in pdf.itertuples(index=False)]
-        row_of = {t: i for i, t in enumerate(terms)}
-        out_frames = []
-
-        if use_wand:
-            lasts = [np.asarray(r.block_last, np.int64)
-                     for r in pdf.itertuples(index=False)]
-            maxes = [np.asarray(r.block_max, np.float64)
-                     for r in pdf.itertuples(index=False)]
-            shared = _ListCache(blobs, lasts)
-            for qid, m in qmeta.items():
-                sel = [row_of[t] for t in m["terms"] if t in row_of]
-                if not sel:
-                    continue
-                cand_ids, score, cand_matched, _stats = bmw_score_lists(
-                    [terms[i] for i in sel], [blobs[i] for i in sel],
-                    [lasts[i] for i in sel], [maxes[i] for i in sel],
-                    m, avg_dl, cfg, k, cache=shared, cache_rows=sel,
-                )
-                out_frames.append((qid, cand_ids, score, cand_matched))
-        else:
-            decoded = [None] * len(terms)
-
-            def get(i):
-                if decoded[i] is None:
-                    decoded[i] = decode_posting_list(blobs[i])
-                return decoded[i]
-
-            for qid, m in qmeta.items():
-                sel = [row_of[t] for t in m["terms"] if t in row_of]
-                if not sel:
-                    continue
-                parts = [get(i) for i in sel]
-                cand_ids, score, cand_matched = score_decoded(
-                    [p[0] for p in parts], [p[1] for p in parts],
-                    [p[2] for p in parts], [terms[i] for i in sel],
-                    m, avg_dl, cfg,
-                )
-                out_frames.append((qid, cand_ids, score, cand_matched))
-
+        terms = pdf["term"].tolist()
+        ids, dls, tfs, counts = decode_blobs(pdf["blob"].tolist())
+        ends = np.cumsum(counts)
+        span = {t: slice(e - n, e) for t, e, n in zip(terms, ends, counts)}
         frames = []
-        for qid, cand_ids, score, cand_matched in out_frames:
+        for qid, m in qmeta.items():
+            sel = [t for t in m["terms"] if t in span]
+            if not sel:
+                continue
+            cand_ids, score, cand_matched = score_decoded(
+                [ids[span[t]] for t in sel], [dls[span[t]] for t in sel],
+                [tfs[span[t]] for t in sel], sel, m, avg_dl, cfg,
+            )
             if len(cand_ids) == 0:
                 continue
             # local top-k, keeping score ties (and the embedding margin) at
@@ -185,8 +230,6 @@ class BM25SearchEngine:
 
     def __init__(self, spark: SparkSession, index_path: str,
                  config: EngineConfig | None = None):
-        from search_engine_spark.operators.codec import CODEC_FORMAT_VERSION
-
         self.spark = spark
         self.cfg = config or EngineConfig()
         self.cat = CatalogAdapter(index_path)
@@ -205,12 +248,6 @@ class BM25SearchEngine:
             from search_engine_spark.functions.stemmer import Stemmer
 
             self.stemmer = Stemmer()
-        # WAND is only safe on the idf-free block_max layout (format >= 2):
-        # older blobs stored idf-applied bounds, which would get idf applied
-        # twice at query time and silently prune valid top-k docs.
-        self.wand_capable = (
-            int(props.get("codec_format", 0)) >= CODEC_FORMAT_VERSION
-        )
         stats = self.cat.read_table(spark, "corpus_stats").collect()[0]
         self.n_docs = int(stats["n_docs"])
         self.avg_dl = float(stats["avg_doc_length"])
@@ -244,34 +281,10 @@ class BM25SearchEngine:
         return self.glove is not None and self.cfg.w_glove != 0.0
 
     def search_batch(
-        self,
-        queries: list[tuple[int, str]],
-        k: int = 10,
-        use_wand: bool | None = None,
+        self, queries: list[tuple[int, str]], k: int = 10,
     ) -> DataFrame:
-        """queries: [(qid, text)] → DataFrame(qid, rank, url, score, warc_ts).
-
-        ``use_wand=None`` auto-enables block-max WAND exactly when the score
-        is decomposable (pure-BM25 ranking: w_cosine == w_glove == 0); the
-        reference-parity combined score always scores exhaustively.
-        """
+        """queries: [(qid, text)] → DataFrame(qid, rank, url, score, warc_ts)."""
         cfg = self.cfg
-        decomposable = cfg.w_cosine == 0.0 and not self._glove_enabled
-        if use_wand is None:
-            use_wand = decomposable and self.wand_capable
-        elif use_wand and not decomposable:
-            raise ValueError(
-                "block-max WAND is only score-safe in pure-BM25 ranking mode "
-                "(w_cosine == 0 and no embedding component); the combined "
-                "reference score does not decompose over terms"
-            )
-        elif use_wand and not self.wand_capable:
-            raise ValueError(
-                "this index predates the idf-free block_max layout "
-                "(codec_format < 2): block-max WAND bounds would apply idf "
-                "twice and silently drop valid top-k docs — rebuild the "
-                "index, or pass use_wand=False for exhaustive scoring"
-            )
         all_terms = sorted(
             {
                 t
@@ -297,32 +310,15 @@ class BM25SearchEngine:
         # column) — .explain shows PushedFilters: [In(term, ...)]. Each
         # matched posting row ships to the scorer ONCE for the whole query
         # batch; the per-bucket scorer fans it out to every query that
-        # contains the term (shared decode cache).
-        matched = self.postings.filter(F.col("term").isin(known))
-        if "enc_avgdl" in matched.columns:
-            # Rows written by an incremental compaction carry the avg_dl
-            # they were ENCODED with; the corpus avg_dl may have drifted
-            # since. The tf-side BM25 factor grows with avg_dl by at most
-            # avg_dl_now/avg_dl_enc, so scaling block_max by
-            # max(1, that ratio) keeps every bound an upper bound (WAND
-            # stays exact) without re-encoding untouched lists
-            # (index_build.merge_derive_tables). Rows encoded at the
-            # current avg_dl scale by exactly 1.0.
-            scale = F.greatest(
-                F.lit(1.0), F.lit(self.avg_dl) / F.col("enc_avgdl")
-            )
-            matched = matched.withColumn(
-                "block_max", F.transform("block_max", lambda x: x * scale)
-            )
-        matched = matched.select(
-            "bucket", "term", "blob", "block_last", "block_max"
-        )
+        # contains the term (one decode per bucket).
+        matched = self.postings.filter(F.col("term").isin(known)).select(
+            "bucket", "term", "blob")
 
         # abs(): the margin must *widen* the boundary for any sign of w_glove
         # (a negative weight still shifts scores by at most |w_glove|).
         margin = 2.0 * abs(cfg.w_glove) if self._glove_enabled else 0.0
         scored = matched.groupBy("bucket").applyInPandas(
-            _make_scorer(qmeta, self.avg_dl, cfg, k, use_wand, margin),
+            _make_scorer(qmeta, self.avg_dl, cfg, k, margin),
             schema=_SCORED_SCHEMA,
         )
 
@@ -386,6 +382,5 @@ class BM25SearchEngine:
             F.col("score") + w_glove * glove_cos(F.col("qid"), F.col("glove_vec")),
         ).drop("glove_vec")
 
-    def search(self, text: str, k: int = 10,
-               use_wand: bool | None = None) -> DataFrame:
-        return self.search_batch([(0, text)], k=k, use_wand=use_wand).drop("qid")
+    def search(self, text: str, k: int = 10) -> DataFrame:
+        return self.search_batch([(0, text)], k=k).drop("qid")

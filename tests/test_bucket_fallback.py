@@ -67,8 +67,7 @@ def test_fallback_postings_byte_identical(spark, corpus, tmp_path):
         build_index(spark, spark.read.parquet(corpus), idx, cfg,
                     resume_batches=1)
         rows[(nb, sp)] = sorted(
-            (r.bucket, r.term, r.local_df, bytes(r.blob),
-             tuple(r.block_last), tuple(r.block_max))
+            (r.bucket, r.term, r.local_df, bytes(r.blob))
             for r in spark.read.parquet(f"{idx}/postings").collect()
         )
     assert rows[(8, 32)] == rows[(8, 8)]

@@ -35,7 +35,7 @@ def encoded(spark):
     sorted_rows = df.repartitionByRange(
         cfg.shuffle_partitions, "bucket", "term"
     ).sortWithinPartitions("bucket", "term", "doc_id")
-    out = encode_sorted_postings(sorted_rows, cfg, avg_dl=80.0).collect()
+    out = encode_sorted_postings(sorted_rows, cfg).collect()
     return {(r["bucket"], r["term"]): r for r in out}, out
 
 
@@ -45,36 +45,25 @@ def test_one_row_per_group(encoded):
 
 
 def test_hot_group_carried_across_batches(encoded):
-    from search_engine_spark.operators.codec import decode_posting_list
+    from search_engine_spark.operators.codec import decode_blobs
 
     by_key, _ = encoded
     r = by_key[(0, "hot")]
     assert r["local_df"] == 25_000
-    ids, dls, tfs = decode_posting_list(bytes(r["blob"]))
+    blob = bytes(r["blob"])
+    ids, dls, tfs, _ = decode_blobs([blob])
     assert len(ids) == 25_000
     assert (ids == np.arange(25_000) * 3).all()
     assert (tfs == 1 + np.arange(25_000) % 7).all()
-    assert len(r["block_last"]) == (25_000 + 127) // 128
-    assert r["block_last"][-1] == ids[-1]
+    # header word 2: the block count
+    assert np.frombuffer(blob[8:12], "<u4")[0] == (25_000 + 127) // 128
 
 
 def test_single_posting_group(encoded):
-    from search_engine_spark.operators.codec import decode_posting_list
+    from search_engine_spark.operators.codec import decode_blobs
 
     by_key, _ = encoded
     r = by_key[(1, "zz_single")]
     assert r["local_df"] == 1
-    ids, dls, tfs = decode_posting_list(bytes(r["blob"]))
+    ids, dls, tfs, _ = decode_blobs([bytes(r["blob"])])
     assert list(ids) == [999] and list(dls) == [10] and list(tfs) == [1]
-
-
-def test_block_max_is_idf_free(encoded):
-    """block_max must equal the tf-side factor with idf == 1 (the query
-    side multiplies idf in)."""
-    by_key, _ = encoded
-    r = by_key[(0, "alpha")]
-    # postings: dl=40, tf=2, avg_dl=80 → tfn=0.05
-    k, b = 1.2, 0.75
-    tfn = 2 / 40
-    expected = (1.0 * tfn * (k + 1)) / (tfn + k * (1 - b + b * (40 / 80.0)))
-    assert r["block_max"][0] == pytest.approx(expected, rel=1e-12)

@@ -98,7 +98,7 @@ def test_monotone_mode_end_to_end(spark, tmp_path):
 
     post = spark.read.parquet(f"{mono_idx}/postings")
     # splice-eligible shape existed: hot terms span multiple blocks
-    assert post.filter(F.size("block_last") > 1).count() > 10
+    assert post.filter(F.col("local_df") > mcfg.block_size).count() > 10
     # id layout: the compaction batch landed in its own 2^48 slot
     parsed = spark.read.parquet(f"{mono_idx}/parsed")
     slots = sorted(

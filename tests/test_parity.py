@@ -96,8 +96,7 @@ def test_rank_identity(spark, built_index, oracle):
 
 
 def test_pure_bm25_rank_identity(spark, built_index, tiny_corpus_rows):
-    """Pure-BM25 ranking (w_cosine = w_glove = 0), engine in auto mode —
-    which scores with block-max WAND — against the oracle."""
+    """Pure-BM25 ranking (w_cosine = w_glove = 0) against the oracle."""
     from search_engine_spark.operators.search import BM25SearchEngine
     from tests.oracle import build_oracle
 
@@ -171,35 +170,121 @@ def test_stemming_mode_mismatch_refused(spark, built_index_stemmed):
         BM25SearchEngine(spark, index_path, EngineConfig(stemming=False))
 
 
-def test_legacy_codec_format_disables_wand(spark, built_index, tmp_path):
-    """An index without the codec_format stamp (or with an older one) must
-    not be scored with block-max WAND (bounds would apply idf twice)."""
+def _add_legacy_side_columns(postings_dir: str, avg_dl: float,
+                             cfg: EngineConfig) -> None:
+    """Rewrite every postings file with the per-row side columns an older
+    writer stored beside each blob: ``block_last`` (each block's last doc
+    id), ``block_max`` (each block's largest idf-free BM25 term factor)
+    and ``enc_avgdl`` (the avg_dl those maxima used)."""
+    import glob
+    import os
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from search_engine_spark.operators.codec import decode_blobs
+
+    k1, b, bs = cfg.bm25_k, cfg.bm25_b, cfg.block_size
+    files = glob.glob(f"{postings_dir}/**/*.parquet", recursive=True)
+    assert files
+    for path in files:
+        table = pq.read_table(path)
+        lasts, maxes = [], []
+        for blob in table.column("blob").to_pylist():
+            ids, dls, tfs, _ = decode_blobs([blob])
+            tfn = tfs / dls
+            factor = tfn * (k1 + 1) / (tfn + k1 * (1 - b + b * dls / avg_dl))
+            starts = np.arange(0, len(ids), bs)
+            lasts.append(ids[np.minimum(starts + bs, len(ids)) - 1].tolist())
+            maxes.append(np.maximum.reduceat(factor, starts).tolist())
+        table = (
+            table.append_column("block_last", pa.array(lasts,
+                                                       pa.list_(pa.int64())))
+            .append_column("block_max", pa.array(maxes,
+                                                 pa.list_(pa.float64())))
+            .append_column("enc_avgdl",
+                           pa.array([avg_dl] * table.num_rows, pa.float64()))
+        )
+        # drop Spark's footer schema (it lists only the current columns)
+        pq.write_table(table.replace_schema_metadata(None), path)
+        # the local filesystem's checksum would no longer match
+        crc = os.path.join(os.path.dirname(path),
+                           f".{os.path.basename(path)}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+
+
+def test_pre_upgrade_index_with_side_columns(spark, built_index, tmp_path,
+                                             tiny_corpus_path):
+    """An index written before the side columns and the ``codec_format``
+    stamp were dropped still answers, folds and resumes: the scorer reads
+    only (bucket, term, blob), a fold rewrites postings without the old
+    columns, and a re-run build checks the old stamps instead of
+    re-stamping them."""
     import json
     import shutil
 
+    import pyarrow.parquet as pq
+
+    from search_engine_spark.operators.index_build import build_index
     from search_engine_spark.operators.search import BM25SearchEngine
+    from search_engine_spark.sources.catalog import CatalogAdapter
+    from search_engine_spark.sources.fixtures import generate_web_pages
+    from search_engine_spark.streaming.incremental import (
+        compact_staging, incremental_index_update,
+    )
 
     index_path, cfg, _ = built_index
     legacy = str(tmp_path / "legacy_index")
     shutil.copytree(index_path, legacy)
+    cat = CatalogAdapter(legacy)
+    avg_dl = float(cat.read_table(spark, "corpus_stats")
+                   .collect()[0]["avg_doc_length"])
+    _add_legacy_side_columns(cat.table_path("postings"), avg_dl, cfg)
     mpath = f"{legacy}/_manifest.json"
     with open(mpath) as f:
         manifest = json.load(f)
-    manifest.get("properties", {}).pop("codec_format", None)
+    manifest["properties"]["codec_format"] = 2
     with open(mpath, "w") as f:
         json.dump(manifest, f)
+    assert "block_max" in spark.read.parquet(
+        cat.table_path("postings")).columns
 
+    # 1. same answers as the original, in both ranking modes
     bm25_cfg = EngineConfig(
         num_buckets=cfg.num_buckets, shuffle_partitions=cfg.shuffle_partitions,
         w_cosine=0.0, w_bm25=1.0, w_glove=0.0,
     )
-    engine = BM25SearchEngine(spark, legacy, bm25_cfg)
-    assert not engine.wand_capable
-    with pytest.raises(ValueError, match="codec_format"):
-        engine.search_batch([(0, "term0000 term0003")], k=5, use_wand=True)
-    # auto mode silently falls back to exhaustive scoring and still answers
-    assert engine.search_batch([(0, "term0000 term0003")], k=5).count() >= 0
+    for mode_cfg in (cfg, bm25_cfg):
+        answers = [
+            sorted(BM25SearchEngine(spark, path, mode_cfg)
+                   .search_batch(FIXTURE_QUERIES, k=10)
+                   .select("qid", "rank", "url", "score").collect())
+            for path in (index_path, legacy)
+        ]
+        assert answers[0] == answers[1] and answers[0]
 
-    # the freshly built index IS wand-capable
-    fresh = BM25SearchEngine(spark, index_path, bm25_cfg)
-    assert fresh.wand_capable
+    # 2. a re-run build checks the old stamps and does not re-stamp them
+    props = cat.properties()
+    pages = spark.read.parquet(tiny_corpus_path)
+    with pytest.raises(ValueError, match="num_buckets"):
+        build_index(spark, pages, legacy,
+                    EngineConfig(num_buckets=cfg.num_buckets + 1,
+                                 shuffle_partitions=cfg.shuffle_partitions))
+    build_index(spark, pages, legacy, cfg)
+    assert cat.properties() == props
+    assert props["codec_format"] == 2
+
+    # 3. a fold rewrites postings with the current columns only
+    incoming = tmp_path / "incoming"
+    incoming.mkdir()
+    pq.write_table(generate_web_pages(1060).slice(1000, 60),
+                   str(incoming / "part-000.parquet"))
+    staging = str(tmp_path / "staging")
+    incremental_index_update(spark, str(incoming), staging,
+                             str(tmp_path / "ckpt"), cfg)
+    out = compact_staging(spark, legacy, staging, cfg)
+    assert out["incremental"] is True
+    cols = spark.read.parquet(cat.table_path("postings")).columns
+    assert sorted(cols) == ["blob", "bucket", "local_df", "term"]

@@ -16,17 +16,6 @@ def plain_index(spark, tiny_corpus_path, tmp_path_factory):
     return index_path
 
 
-def test_forced_wand_rejected_in_combined_mode(spark, plain_index):
-    """BMW is BM25-decomposable only; forcing it under the reference's
-    0.9-cosine combined score must fail loudly, not silently drop the
-    cosine component."""
-    from search_engine_spark.operators.search import BM25SearchEngine
-
-    engine = BM25SearchEngine(spark, plain_index, EngineConfig())
-    with pytest.raises(ValueError, match="score-safe"):
-        engine.search_batch([(1, "term0001")], k=5, use_wand=True)
-
-
 def test_glove_config_against_plain_index_rejected(spark, plain_index, tmp_path):
     from search_engine_spark.functions.glove import fixture_glove, save_glove
     from search_engine_spark.operators.search import BM25SearchEngine

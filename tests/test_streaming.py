@@ -434,24 +434,24 @@ def test_compaction_dedupes_within_staging(spark, dirs, tmp_path):
     assert parsed.count() == base_docs + new_docs
 
 
-def test_compaction_avgdl_drift_keeps_wand_exact(spark, dirs, tmp_path):
-    """Incremental compaction leaves untouched posting rows encoded at the
-    OLD avg_dl. When fresh docs RAISE the corpus avg_dl, the tf-side BM25
-    factor of every old doc rises, so the stored block_max values alone
-    would under-bound — the loader's max(1, avg_dl_now/enc_avgdl) scaling
-    (operators/search.py) must keep WAND pruning exact. Build short docs,
-    compact in docs ~8x longer, and pin WAND == exhaustive on queries that
-    hit untouched terms."""
+def test_compaction_avgdl_drift_matches_oracle(spark, dirs, tmp_path):
+    """Incremental compaction passes untouched posting rows through as
+    they were written before the fold. When fresh docs RAISE the corpus
+    avg_dl, the BM25 length factor of every old doc changes, so scoring
+    must take avg_dl from the folded corpus, never from the posting rows.
+    Build short docs, compact in docs ~8x longer, and pin pure-BM25 ranks
+    and scores to the single-process oracle over the union corpus, on
+    queries that hit untouched terms."""
     shutil.rmtree(dirs["staging"], ignore_errors=True)
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from search_engine_spark.operators.index_build import build_index
     from search_engine_spark.operators.search import BM25SearchEngine
-    from search_engine_spark.sources.catalog import CatalogAdapter
     from search_engine_spark.streaming.incremental import (
         compact_staging, incremental_index_update,
     )
+    from tests.oracle import build_oracle
 
     def pages(texts, start):
         n = len(texts)
@@ -501,26 +501,27 @@ def test_compaction_avgdl_drift_keeps_wand_exact(spark, dirs, tmp_path):
     assert out["incremental"] is True
     assert out["avg_dl"] > 3 * old_avg  # the drift is material
 
-    # untouched rows still carry the OLD encode-time avg_dl
-    post = spark.read.parquet(CatalogAdapter(idx).table_path("postings"))
-    enc = {r["term"]: r["enc_avgdl"]
-           for r in post.select("term", "enc_avgdl").collect()}
-    assert enc["alpha"] == pytest.approx(old_avg)
-    assert enc["common"] == pytest.approx(out["avg_dl"])  # merged: re-encoded
+    oracle = build_oracle(
+        [(r["url"], r["warc_ts"], r["text"])
+         for t in (pages(base_texts, 0), pages(fresh_texts, 1000))
+         for r in t.to_pylist()],
+        config=cfg,
+    )
+    assert out["avg_dl"] == pytest.approx(oracle.avg_dl, abs=1e-12)
 
-    # WAND must stay exact on queries over the untouched (under-encoded)
-    # terms — this is precisely where unscaled bounds would prune wrongly
     engine = BM25SearchEngine(spark, idx, cfg)
     queries = [(1, "alpha bravo"), (2, "charlie common"),
                (3, "delta echo foxtrot"), (4, "golf alpha common")]
-    key = lambda r: (r["qid"], r["rank"], r["url"],
-                     round(r["score"], 10))  # noqa: E731
-    exhaustive = sorted(map(key, engine.search_batch(
-        queries, k=10, use_wand=False).collect()))
-    wand = sorted(map(key, engine.search_batch(
-        queries, k=10, use_wand=True).collect()))
-    assert wand == exhaustive
-    assert len(exhaustive) > 0
+    got = {}
+    for r in engine.search_batch(queries, k=10).collect():
+        got.setdefault(r["qid"], []).append((r["rank"], r["url"], r["score"]))
+    for qid, text in queries:
+        expected = oracle.search(text, k=10)
+        actual = sorted(got.get(qid, []))
+        assert len(actual) == len(expected) > 0, qid
+        for (er, eu, es, _ts), (ar, au, asc) in zip(expected, actual):
+            assert (ar, au) == (er, eu), qid
+            assert asc == pytest.approx(es, abs=1e-9), qid
 
 
 def _table_counts(spark, idx):

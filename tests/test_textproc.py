@@ -137,7 +137,7 @@ class TestCodecRoundTrip:
         import numpy as np
 
         from search_engine_spark.operators.codec import (
-            decode_posting_list, encode_posting_list,
+            decode_blobs, encode_posting_list,
         )
 
         rng = np.random.default_rng(7)
@@ -145,48 +145,26 @@ class TestCodecRoundTrip:
         ids[0] = -(2**62)  # negative first id (xxhash64 is signed)
         dls = rng.integers(1, 300, 500)
         tfs = rng.integers(1, 50, 500)
-        blob, last, bmax = encode_posting_list(
-            ids, dls, tfs, block_size=128, avg_dl=100.0
-        )
-        out_ids, out_dl, out_tf = decode_posting_list(blob)
+        blob = encode_posting_list(ids, dls, tfs, block_size=128)
+        out_ids, out_dl, out_tf, counts = decode_blobs([blob])
         assert (out_ids == ids).all()
         assert (out_dl == dls).all()
         assert (out_tf == tfs).all()
-        assert len(last) == len(bmax) == (500 + 127) // 128
-        assert (last == ids[np.minimum(np.arange(1, 5) * 128, 500) - 1]).all()
-
-    def test_selected_blocks(self):
-        import numpy as np
-
-        from search_engine_spark.operators.codec import (
-            decode_posting_list, encode_posting_list,
-        )
-
-        ids = np.arange(0, 1000, dtype=np.int64) * 7 - 3500
-        dls = np.full(1000, 50)
-        tfs = np.arange(1000) % 9 + 1
-        blob, last, bmax = encode_posting_list(
-            ids, dls, tfs, block_size=100, avg_dl=50.0
-        )
-        got_ids, got_dl, got_tf = decode_posting_list(blob, blocks=np.array([2, 7]))
-        exp = np.concatenate([ids[200:300], ids[700:800]])
-        assert (got_ids == exp).all()
-        assert (got_tf == np.concatenate([tfs[200:300], tfs[700:800]])).all()
+        assert counts.tolist() == [500]
 
     @pytest.mark.parametrize("n", [1, 2, 127, 128, 129, 1000])
     def test_roundtrip_sizes(self, n):
         import numpy as np
 
         from search_engine_spark.operators.codec import (
-            decode_posting_list, encode_posting_list,
+            decode_blobs, encode_posting_list,
         )
 
         rng = np.random.default_rng(n)
         ids = np.sort(rng.choice(10**9, size=n, replace=False).astype(np.int64))
         dls = rng.integers(1, 200, n)
         tfs = rng.integers(1, 20, n)
-        blob, _, _ = encode_posting_list(ids, dls, tfs, 128, 80.0)
-        out = decode_posting_list(blob)
+        out = decode_blobs([encode_posting_list(ids, dls, tfs, 128)])
         assert (out[0] == ids).all() and (out[1] == dls).all() and (out[2] == tfs).all()
 
 
