@@ -62,11 +62,7 @@ def main() -> None:
         queries = FIXTURE_QUERIES
 
     engine = BM25SearchEngine(spark, args.index_path, cfg)
-    rows = (
-        engine.search_batch(queries, k=args.k)
-        .orderBy("qid", "rank")
-        .collect()
-    )
+    rows = engine.search_batch(queries, k=args.k).collect()  # (qid, rank) order
     for r in rows:
         print(json.dumps(
             {"qid": r["qid"], "rank": r["rank"], "url": r["url"],

@@ -529,6 +529,7 @@ def build_index(
     cfg = config or EngineConfig()
     cat = CatalogAdapter(index_path)
     t0 = time.time()
+    snapshots = cat.snapshot_count()
 
     # ---- stage A: parse + stage (resume checkpoint) -----------------------
     # The expensive narrow stage is committed in `resume_batches` slices,
@@ -584,7 +585,9 @@ def build_index(
         "num_buckets": cfg.num_buckets,
         "stage_sec": stage_sec,
     }
-    cat.finish_build(metrics)
+    # a re-run on a complete index commits nothing: keep the build record
+    if cat.snapshot_count() > snapshots:
+        cat.finish_build(metrics)
     return metrics
 
 
@@ -754,11 +757,10 @@ def _stamp_derived(cat: CatalogAdapter) -> None:
     """Stamped LAST: the derived tables now reflect exactly the committed
     parsed batches. A compaction replay compares this stamp against the
     batch list to detect tables left half-swapped by a crash
-    (streaming/incremental.py::compact_staging)."""
-    cat.set_properties({
-        "derived_from_batches": sorted(map(str,
-                                           cat.completed_batches("parsed"))),
-    })
+    (streaming/incremental.py::compact_staging); committed only if new."""
+    batches = sorted(map(str, cat.completed_batches("parsed")))
+    if cat.properties().get("derived_from_batches") != batches:
+        cat.set_properties({"derived_from_batches": batches})
 
 
 #: the postings table's rows (the fold's output)

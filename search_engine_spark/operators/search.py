@@ -5,26 +5,22 @@ searcher.py:22-136, ranker.py:17-109):
 
 - query parsing runs driver-side with the *same* tokenizer as documents
   (search_engine.py:87-90 parity);
-- the tiny query-term relation is broadcast against the postings table
-  (J1/J2 as a broadcast hash join — posting row-group pruning on the sorted
-  ``term`` column skips non-matching parquet pages);
-- candidate generation + scoring run partition-parallel per bucket: one
-  vectorized decode of every matched blob of the bucket, then per query a
-  document-at-a-time merge, min-match prune (int(0.35·|q|),
-  searcher.py:67-68) and vectorized scoring of every candidate with the
-  reference's exact formulas (nonstandard BM25 ranker.py:91-102, weighted
-  tf-idf cosine ranker.py:80). Like the reference, the scorer ranks every
-  candidate it loads: the pure-BM25 mode (w_cosine = w_glove = 0) takes
-  the same path with zero weights;
-- optional GloVe-style embedding component (reference ranker.py:78,
-  search_engine.py:13-23 — made optional here): per-doc mean vector from
-  ``doc_stats.glove_vec``, query vector driver-side, cosine added after the
-  shard pass with a widened local top-k margin (±w_glove bounds the
-  post-hoc score shift, so the widened boundary provably keeps every global
-  top-k candidate);
-- one global TakeOrderedAndProject equivalent (window row_number ≤ k) with
-  the reference tie-break: score desc, timestamp desc, doc key desc
-  (ranker.py:51-63 takes the *last* k of an ascending (score, date) sort).
+- the query terms reach the postings scan as one pushed ``term IN (…)``;
+- scoring runs per bucket: the matched blobs decode in byte-bounded
+  slices, then per query a document-at-a-time merge, min-match prune
+  (int(0.35·|q|), searcher.py:67-68) and vectorized scoring of every
+  candidate with the reference's exact formulas (nonstandard BM25
+  ranker.py:91-102, weighted tf-idf cosine ranker.py:80) keep a tie-exact
+  local top-k. Pure-BM25 mode (w_cosine = w_glove = 0) is the same path;
+- join-late ranking: the driver prunes each query to its global top-k,
+  reads ONLY those docs' ``doc_stats`` rows (``bucket IN (…) AND doc_id IN
+  (…)``) and ranks them: score desc, timestamp desc (nulls last), doc key
+  desc (ranker.py:51-63 takes the *last* k of an ascending (score, date)
+  sort). The result is a local relation;
+- optional GloVe-style embedding (reference ranker.py:78, made optional):
+  the cosine of the looked-up ``glove_vec`` and the query vector is added
+  on the driver; the top-k boundary widens by 2·|w_glove|, which bounds
+  the score shift, so every global top-k candidate is kept.
 
 Scoring quirks kept (SURVEY.md §3.4): duplicate query terms score once per
 position; unknown query terms occupy a position with idf 0 (shrinking the
@@ -38,24 +34,43 @@ import math
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql.types import (
-    DoubleType, IntegerType, LongType, StructField, StructType,
-)
+from pyspark.sql import Column, DataFrame, SparkSession
 
 from search_engine_spark.config import EngineConfig
+from search_engine_spark.functions.glove import query_vector
 from search_engine_spark.functions.textproc import parse_sentence
 from search_engine_spark.sources.catalog import CatalogAdapter
 
-_SCORED_SCHEMA = StructType(
-    [
-        StructField("qid", LongType(), False),
-        StructField("doc_id", LongType(), False),
-        StructField("score", DoubleType(), False),
-        StructField("matched", IntegerType(), False),
-    ]
-)
+_SCORED_SCHEMA = "qid long, bucket int, doc_id long, score double"
+_RESULT = pa.schema([("qid", pa.int64()), ("rank", pa.int32()),
+                     ("url", pa.string()), ("score", pa.float64()),
+                     ("warc_ts", pa.timestamp("us", tz="UTC"))])
+#: the scorer decodes a bucket's blobs in slices of about this many bytes:
+#: larger passes cost more per byte (BASELINE.md, "Join-late ranking")
+_DECODE_SLICE_BYTES = 1 << 18
+
+
+def _sql_in(col: str, values) -> Column:
+    """``col IN (v, …)`` as ONE parsed SQL expression: ``Column.isin`` pays
+    about three py4j round trips per literal, and both plan to the same
+    pushed ``In``. Strings are quoted with ``\\`` and ``'`` escaped;
+    anything else must be an integer."""
+    def lit(v) -> str:
+        if isinstance(v, str):
+            return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        return str(int(v))
+
+    return F.expr(f"{col} IN ({', '.join(map(lit, values))})")
+
+
+def _local_frame(spark: SparkSession, rows: list[tuple]) -> DataFrame:
+    """(qid, rank, url, score, warc_ts µs) rows → a ``LocalRelation`` over
+    an Arrow table: collecting it starts no job (a row list would not)."""
+    cols = list(zip(*rows)) or [()] * len(_RESULT)
+    return spark.createDataFrame(pa.table(
+        [pa.array(c, f.type) for c, f in zip(cols, _RESULT)], schema=_RESULT))
 
 
 def _build_query_meta(queries, cfg: EngineConfig, term_df: dict[str, int],
@@ -99,8 +114,8 @@ def score_decoded(
     qmeta_entry: dict,
     avg_dl: float,
     cfg: EngineConfig,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Exhaustively score decoded postings → (doc_ids, score, matched).
+) -> tuple[np.ndarray, np.ndarray]:
+    """Exhaustively score decoded postings → (doc_ids, score).
 
     The scoring replicates the reference ranker exactly (SURVEY.md §2.6):
     per-position tf-idf matrix, weighted cosine + nonstandard BM25, with
@@ -109,10 +124,7 @@ def score_decoded(
     m = qmeta_entry
     n_q, threshold = m["n"], m["threshold"]
     idf_row, q_row0, positions = m["idf_row"], m["q_row0"], m["positions"]
-    empty = (np.zeros(0, np.int64), np.zeros(0), np.zeros(0, np.int64))
-    if not ids_parts:
-        return empty
-
+    empty = (np.zeros(0, np.int64), np.zeros(0))
     all_ids = np.concatenate(ids_parts)
     if len(all_ids) == 0:
         return empty
@@ -140,7 +152,6 @@ def score_decoded(
     M = M[keep]
     dl_u = dl_u[keep]
     cand_ids = unique_ids[keep]
-    cand_matched = matched[keep]
 
     # nonstandard BM25 summed over query positions (ranker.py:91-102)
     bm = (
@@ -162,67 +173,103 @@ def score_decoded(
         )
         score = score + cfg.w_cosine * cos
 
-    return cand_ids, score, cand_matched
+    return cand_ids, score
 
 
 def _make_scorer(qmeta: dict, avg_dl: float, cfg: EngineConfig, k: int,
-                 topk_margin: float):
+                 margin: float):
     """applyInPandas scorer for one bucket's matched posting rows.
 
     The group key is the BUCKET alone: every query in the batch scores
     against the same decoded rows, and the job schedules |buckets| groups
-    instead of |queries|·|buckets|. The group's blobs decode in ONE
-    ``codec.decode_blobs`` pass; every row belongs to some query's terms
-    (the scan keeps only the batch's known terms), so nothing decodes for
-    nothing, and a list matched by several queries decodes once.
-    ``score_decoded`` then runs once per query over its terms' slices.
-
-    ``topk_margin`` widens the tie-keeping local top-k boundary: with the
-    embedding component enabled the final score shifts by at most ±w_glove,
-    so keeping everything with partial score >= kth - 2·w_glove keeps every
-    possible global top-k member.
-    """
+    instead of |queries|·|buckets|. Its blobs decode once, in slices of
+    about ``_DECODE_SLICE_BYTES``; ``score_decoded`` then runs per query,
+    which keeps its bucket-local ``_global_topk`` candidates (one pruned
+    here has k bucket-mates that beat it after any embedding shift)."""
 
     def score_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         from search_engine_spark.operators.codec import decode_blobs
 
-        empty = pd.DataFrame(columns=["qid", "doc_id", "score", "matched"])
-        if not len(pdf):
-            return empty
-
-        terms = pdf["term"].tolist()
-        ids, dls, tfs, counts = decode_blobs(pdf["blob"].tolist())
-        ends = np.cumsum(counts)
-        span = {t: slice(e - n, e) for t, e, n in zip(terms, ends, counts)}
         frames = []
+        terms = pdf["term"].tolist()
+        blobs = pdf["blob"].tolist()
+        sizes = np.fromiter(map(len, blobs), np.int64, len(blobs))
+        # a blob joins the slice its first byte falls in
+        slice_of = (np.cumsum(sizes) - sizes) // _DECODE_SLICE_BYTES
+        bounds = np.append(np.flatnonzero(np.diff(slice_of, prepend=-1)),
+                           len(blobs))
+        span = {}
+        for lo, hi in zip(bounds[:-1], bounds[1:]):
+            ids, dls, tfs, counts = decode_blobs(blobs[lo:hi])
+            ends = np.cumsum(counts)
+            for t, e, n in zip(terms[lo:hi], ends, counts):
+                span[t] = (ids[e - n:e], dls[e - n:e], tfs[e - n:e])
         for qid, m in qmeta.items():
             sel = [t for t in m["terms"] if t in span]
             if not sel:
                 continue
-            cand_ids, score, cand_matched = score_decoded(
-                [ids[span[t]] for t in sel], [dls[span[t]] for t in sel],
-                [tfs[span[t]] for t in sel], sel, m, avg_dl, cfg,
+            cand_ids, score = score_decoded(
+                [span[t][0] for t in sel], [span[t][1] for t in sel],
+                [span[t][2] for t in sel], sel, m, avg_dl, cfg,
             )
-            if len(cand_ids) == 0:
-                continue
-            # local top-k, keeping score ties (and the embedding margin) at
-            # the boundary so the global tie-break stays exact across buckets
             if len(score) > k:
-                kth = np.partition(score, -k)[-k]
-                sel_m = score >= kth - topk_margin
-            else:
-                sel_m = np.ones(len(score), bool)
+                keep = score >= np.partition(score, -k)[-k] - margin
+                cand_ids, score = cand_ids[keep], score[keep]
             frames.append(pd.DataFrame(
-                {
-                    "qid": qid,
-                    "doc_id": cand_ids[sel_m],
-                    "score": score[sel_m],
-                    "matched": cand_matched[sel_m].astype(np.int32),
-                }
+                {"qid": qid, "bucket": key[0], "doc_id": cand_ids,
+                 "score": score}
             ))
-        return pd.concat(frames, ignore_index=True) if frames else empty
+        return pd.concat(frames or [pd.DataFrame(
+            columns=["qid", "bucket", "doc_id", "score"])])
 
     return score_group
+
+
+def _global_topk(scored: list[tuple], k: int, margin: float) -> list[tuple]:
+    """(qid, bucket, doc_id, score) rows → per qid, the rows that can still
+    rank in the top k: score >= the kth best score − ``margin``, every tie
+    kept. ``margin`` is 2·|w_glove| with the embedding on (the final score
+    moves by at most ±w_glove), else 0."""
+    by_qid: dict[int, list[tuple]] = {}
+    for row in scored:
+        by_qid.setdefault(row[0], []).append(row)
+    out = []
+    for rows in by_qid.values():
+        if len(rows) > k:
+            kth = sorted((r[3] for r in rows), reverse=True)[k - 1]
+            rows = [r for r in rows if r[3] >= kth - margin]
+        out += rows
+    return out
+
+
+def _cosine(v, q: np.ndarray) -> float:
+    """cosine(doc vector, query vector), 0 where either side is zero
+    (ranker.py:85-88)."""
+    num, den = np.dot(v, q), np.linalg.norm(v) * np.linalg.norm(q)
+    return float(num / den) if den != 0 and num != 0 else 0.0
+
+
+def _rank(cands: list[tuple], docs: list[tuple], k: int,
+          w_glove: float = 0.0, qvecs: dict | None = None) -> list[tuple]:
+    """Join candidates (qid, bucket, doc_id, score) to doc rows (doc_id, url,
+    warc_ts µs[, glove_vec]), add w_glove · cosine to ``qvecs[qid]`` if
+    given, and keep per qid the top k by (score desc, warc_ts desc, url
+    desc), null warc_ts last as Spark's ``desc`` does (ranker.py:51-63)."""
+    doc = {d[0]: d[1:] for d in docs}
+    by_qid: dict[int, list[tuple]] = {}
+    for qid, _bucket, doc_id, score in cands:
+        if doc_id not in doc:
+            continue
+        url, ts, *vec = doc[doc_id]
+        if qvecs is not None:
+            score = score + w_glove * _cosine(vec[0], qvecs[qid])
+        by_qid.setdefault(qid, []).append((score, ts is not None, ts, url))
+    return [
+        (qid, rank, url, score, ts)
+        for qid in sorted(by_qid)
+        for rank, (score, _, ts, url) in enumerate(
+            sorted(by_qid[qid], reverse=True)[:k], 1)
+    ]
 
 
 class BM25SearchEngine:
@@ -269,11 +316,8 @@ class BM25SearchEngine:
     def _term_dfs(self, terms: list[str]) -> dict[str, int]:
         if not terms:
             return {}
-        rows = (
-            self.term_stats.filter(F.col("term").isin(terms))
-            .select("term", "df")
-            .collect()
-        )
+        rows = self.term_stats.filter(_sql_in("term", terms)).select(
+            "term", "df").collect()
         return {r["term"]: int(r["df"]) for r in rows}
 
     @property
@@ -283,104 +327,59 @@ class BM25SearchEngine:
     def search_batch(
         self, queries: list[tuple[int, str]], k: int = 10,
     ) -> DataFrame:
-        """queries: [(qid, text)] → DataFrame(qid, rank, url, score, warc_ts)."""
+        """queries: [(qid, text)] → DataFrame(qid, rank, url, score, warc_ts),
+        a local relation ordered by (qid, rank)."""
         cfg = self.cfg
-        all_terms = sorted(
-            {
-                t
-                for _, text in queries
-                for t in parse_sentence(text, stemmer=self.stemmer).tokens
-            }
-        )
-        term_df = self._term_dfs(all_terms)
+        term_df = self._term_dfs(sorted({
+            t for _, text in queries
+            for t in parse_sentence(text, stemmer=self.stemmer).tokens}))
         qmeta = _build_query_meta(queries, cfg, term_df, self.n_docs,
                                   stemmer=self.stemmer)
 
-        known = sorted(
-            {t for m in qmeta.values() for t in m["terms"] if t in term_df}
-        )
-        empty = self.spark.createDataFrame(
-            [], "qid long, rank int, url string, score double, warc_ts timestamp"
-        )
+        known = sorted({t for m in qmeta.values() for t in m["terms"]
+                        if t in term_df})
         if not known:
-            return empty
+            return _local_frame(self.spark, [])
 
-        # Literal isin predicate (not a join): pushes into the parquet scan
-        # (row-group min/max + dictionary pruning on the sorted `term`
-        # column) — .explain shows PushedFilters: [In(term, ...)]. Each
-        # matched posting row ships to the scorer ONCE for the whole query
-        # batch; the per-bucket scorer fans it out to every query that
-        # contains the term (one decode per bucket).
-        matched = self.postings.filter(F.col("term").isin(known)).select(
-            "bucket", "term", "blob")
-
-        # abs(): the margin must *widen* the boundary for any sign of w_glove
-        # (a negative weight still shifts scores by at most |w_glove|).
+        # 1. per-bucket scorer: each matched posting row ships to it ONCE
+        # for the whole batch. abs(): the margin must *widen* the boundary
+        # for any sign of w_glove.
         margin = 2.0 * abs(cfg.w_glove) if self._glove_enabled else 0.0
-        scored = matched.groupBy("bucket").applyInPandas(
-            _make_scorer(qmeta, self.avg_dl, cfg, k, margin),
-            schema=_SCORED_SCHEMA,
+        scored = (
+            self.postings.filter(_sql_in("term", known))
+            .select("bucket", "term", "blob")
+            .groupBy("bucket")
+            .applyInPandas(_make_scorer(qmeta, self.avg_dl, cfg, k, margin),
+                           schema=_SCORED_SCHEMA)
+            .collect()
         )
+        # 2. global top-k per query (ties and the embedding margin kept)
+        cands = _global_topk(scored, k, margin)
+        if not cands:
+            return _local_frame(self.spark, [])
 
-        doc_cols = ["doc_id", "url", "warc_ts"]
+        # 3. only the candidates' doc rows (bucket partitions pruned). Ids
+        # padded past 10 with unused negative ones plan as InSet: an In's
+        # literals compile into new code per query. warc_ts as epoch µs:
+        # no time-zone round trip through Python datetimes.
+        ids = sorted({r[2] for r in cands})
+        ids += range(-1, len(ids) - 12, -1)
+        doc_cols = ["doc_id", "url", F.unix_micros("warc_ts")]
         if self._glove_enabled:
             doc_cols.append("glove_vec")
-        with_docs = scored.join(self.doc_stats.select(*doc_cols), "doc_id")
-
-        if self._glove_enabled:
-            with_docs = self._add_glove_score(with_docs, qmeta)
-
-        w = Window.partitionBy("qid").orderBy(
-            F.desc("score"), F.desc("warc_ts"), F.desc("url")
+        docs = (
+            self.doc_stats.filter(
+                _sql_in("bucket", sorted({r[1] for r in cands}))
+                & _sql_in("doc_id", ids)
+            )
+            .select(*doc_cols)
+            .collect()
         )
-        return (
-            with_docs.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "rank", "url", "score", "warc_ts")
-        )
-
-    def _add_glove_score(self, with_docs: DataFrame, qmeta: dict) -> DataFrame:
-        """score += w_glove · cosine(doc_vec, query_vec) (ranker.py:78,85-88).
-
-        Query vectors are tiny (one per query) and ride the UDF closure;
-        the cosine runs Arrow-batched over (qid, glove_vec) pairs.
-        """
-        from search_engine_spark.functions.glove import query_vector
-
-        w_glove = float(self.cfg.w_glove)
-        dim = self.cfg.glove_dim
-        qvecs = {
-            qid: query_vector(m["tokens"], self.glove, dim)
-            for qid, m in qmeta.items()
-        }
-
-        @F.pandas_udf(DoubleType())
-        def glove_cos(qid: pd.Series, vec: pd.Series) -> pd.Series:
-            n = len(qid)
-            if n == 0:
-                return pd.Series(np.zeros(0))
-            # vectorized: stack the 25-d doc vectors into an (n, dim) matrix
-            # and batch the dot products per qid group (no per-row Python).
-            dv = np.stack([np.asarray(v, np.float64) for v in vec])
-            dnorm = np.linalg.norm(dv, axis=1)
-            out = np.zeros(n)
-            qids = qid.to_numpy()
-            for q in np.unique(qids):
-                qv = qvecs[int(q)]
-                qn = np.linalg.norm(qv)
-                m = qids == q
-                num = dv[m] @ qv
-                den = dnorm[m] * qn
-                ok = (den != 0) & (num != 0)
-                vals = np.zeros(m.sum())
-                vals[ok] = num[ok] / den[ok]
-                out[m] = vals
-            return pd.Series(out)
-
-        return with_docs.withColumn(
-            "score",
-            F.col("score") + w_glove * glove_cos(F.col("qid"), F.col("glove_vec")),
-        ).drop("glove_vec")
+        # 4. rank on the driver
+        qvecs = {qid: query_vector(m["tokens"], self.glove, cfg.glove_dim)
+                 for qid, m in qmeta.items()} if self._glove_enabled else None
+        return _local_frame(self.spark,
+                            _rank(cands, docs, k, cfg.w_glove, qvecs))
 
     def search(self, text: str, k: int = 10) -> DataFrame:
         return self.search_batch([(0, text)], k=k).drop("qid")

@@ -288,6 +288,9 @@ class CatalogAdapter:
         return self._load().get("properties", {})
 
     # -- build metadata ----------------------------------------------------
+    def snapshot_count(self) -> int:
+        return len(self._load()["snapshots"])
+
     def finish_build(self, metrics: dict) -> None:
         manifest = self._load()
         manifest["build"] = metrics

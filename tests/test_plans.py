@@ -3,8 +3,9 @@
 The 100 TB design depends on plan properties that silent regressions can
 destroy: the query path's term predicate must reach the parquet scan
 (row-group pruning over the sorted term column), the parse stage must not
-read the heavy ``html`` column, and the query-term join must broadcast.
-These tests pin them via .explain capture.
+read the heavy ``html`` column, and a query reads only its candidates'
+doc rows (no join against ``doc_stats``, no window rank). These tests pin
+them via .explain capture.
 """
 
 import io
@@ -60,32 +61,117 @@ def test_query_term_filter_pushed_to_parquet(spark, small_index):
     assert "In(term" in plan or "EqualTo(term" in plan, plan
 
 
-def test_query_join_is_broadcast(spark, small_index):
-    """The query-terms ⋈ postings join must be a broadcast hash join —
-    a shuffle of the postings table per query batch would be wrong at any
-    scale."""
+@pytest.fixture
+def query_plans(spark, monkeypatch):
+    """The executed plan of every DataFrame collected while the test runs
+    (``collect`` and ``toPandas``): the query jobs ``search_batch`` starts."""
+    frame_cls = type(spark.range(1))    # the session's concrete DataFrame
+    plans = []
+    for name in ("collect", "toPandas"):
+        def run(self, _orig=getattr(frame_cls, name)):
+            out = _orig(self)
+            plans.append(self._jdf.queryExecution().executedPlan().toString())
+            return out
+        monkeypatch.setattr(frame_cls, name, run)
+    return plans
+
+
+def test_doc_lookup_prunes_buckets_and_pushes_doc_ids(spark, small_index,
+                                                      query_plans):
+    """Join-late ranking reads only the candidates' doc rows: the
+    ``doc_stats`` scan prunes bucket partitions and pushes the doc ids."""
     from search_engine_spark.operators.search import BM25SearchEngine
     from search_engine_spark.sources.fixtures import FIXTURE_QUERIES
 
     index_path, cfg = small_index
     engine = BM25SearchEngine(spark, index_path, cfg)
-    result = engine.search_batch(FIXTURE_QUERIES[:3], k=5)
-    plan = _explain(result, "formatted")
-    assert "BroadcastHashJoin" in plan, plan
-    # the big postings relation must NOT be exchanged by the query join:
-    # the only sort-merge join allowed is none
-    assert "SortMergeJoin" not in plan, plan
+    engine.search_batch(FIXTURE_QUERIES[:3], k=5)
+    lookups = [p for p in query_plans if "/doc_stats" in p]
+    assert len(lookups) == 1, query_plans
+    scan = next(ln for ln in lookups[0].splitlines() if "FileScan" in ln)
+    partition = scan.split("PartitionFilters: [", 1)[1].split("]")[0]
+    pushed = scan.split("PushedFilters: [", 1)[1].split("], ")[0]
+    assert "bucket" in partition, scan
+    assert "In(doc_id" in pushed, scan
 
 
-def test_topk_is_window_rank_with_partial_filter(spark, small_index):
+def test_query_jobs_have_no_join_window_or_broadcast(spark, small_index,
+                                                     query_plans):
+    """No query job joins ``doc_stats`` (sort-merge or broadcast) or ranks
+    through a ``Window``: the top-k is ranked on the driver."""
     from search_engine_spark.operators.search import BM25SearchEngine
     from search_engine_spark.sources.fixtures import FIXTURE_QUERIES
 
     index_path, cfg = small_index
     engine = BM25SearchEngine(spark, index_path, cfg)
-    plan = _explain(engine.search_batch(FIXTURE_QUERIES[:2], k=5), "formatted")
-    assert "Window" in plan
-    assert "row_number" in plan
+    engine.search_batch(FIXTURE_QUERIES[:5], k=5).collect()
+    assert len(query_plans) >= 3, query_plans   # term dfs, scorer, doc rows
+    for plan in query_plans:
+        for node in ("SortMergeJoin", "Window", "BroadcastExchange",
+                     "BroadcastHashJoin"):
+            assert node not in plan, plan
+
+
+def test_warm_query_compiles_no_code(spark, small_index):
+    """A warm query generates no new code: the doc-id lookup's literals are
+    a set lookup (InSet), not an In whose literals are compiled into a new
+    class for every query (2 compilations a query before)."""
+    from search_engine_spark.operators.search import BM25SearchEngine
+
+    index_path, cfg = small_index
+    engine = BM25SearchEngine(spark, index_path, cfg)
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source \
+        .CodegenMetrics.METRIC_COMPILATION_TIME()
+    for q in ("term0001 term0042", "term0002"):     # warm-up
+        engine.search(q, k=5).collect()
+    before = metrics.getCount()
+    for q in ("term0003 term0004", "term0005", "term0107 term1500"):
+        assert engine.search(q, k=5).collect()
+    assert metrics.getCount() == before
+
+
+def test_result_collect_starts_no_job(spark, small_index):
+    """The returned frame is a local relation: collecting it (or the
+    single-query ``search`` projection, or an empty result) starts no
+    Spark job."""
+    from search_engine_spark.operators.search import BM25SearchEngine
+    from search_engine_spark.sources.fixtures import FIXTURE_QUERIES
+
+    index_path, cfg = small_index
+    engine = BM25SearchEngine(spark, index_path, cfg)
+    sc = spark.sparkContext
+    frames = [engine.search_batch(FIXTURE_QUERIES[:3], k=5),
+              engine.search(FIXTURE_QUERIES[0][1], k=5),
+              engine.search("qqqunknown", k=5)]
+    sc.setJobGroup("collect-result", "collect the search results")
+    try:
+        rows = [f.collect() for f in frames]
+        jobs = sc.statusTracker().getJobIdsForGroup("collect-result")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert rows[0] and rows[1] and not rows[2]
+    assert list(jobs) == []
+
+
+def test_sql_in_escapes_and_pushes(spark, tmp_path):
+    """The one-expression IN matches terms holding ``'``, ``\\`` and
+    non-ASCII characters exactly, and still pushes into the scan."""
+    from search_engine_spark.operators.search import _sql_in
+
+    terms = ["o'neil", "back\\slash", "\\'", "''", "café", "東京", "plain",
+             "a\\nb", "100%_"]
+    decoys = ["oneil", "backslash", "\\", "'", "cafe", "a\nb", "100x"]
+    path = str(tmp_path / "terms")
+    spark.createDataFrame([(t,) for t in terms + decoys], "term string") \
+        .write.parquet(path)
+    df = spark.read.parquet(path).filter(_sql_in("term", terms))
+    assert sorted(r["term"] for r in df.collect()) == sorted(terms)
+    plan = _explain(df, "formatted")
+    pushed = next(ln for ln in plan.splitlines() if "PushedFilters" in ln)
+    assert "In(term" in pushed, plan
+    assert spark.read.parquet(path).filter(
+        _sql_in("term", ["o'neil"])).count() == 1
 
 
 def test_top_customers_uses_take_ordered(spark):

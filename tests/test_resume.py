@@ -117,6 +117,28 @@ def test_table_level_resume_skips_finished_stages(spark, tiny_corpus_path, tmp_p
     assert engine.search_batch(FIXTURE_QUERIES[:3], k=5).count() > 0
 
 
+def test_rerun_on_complete_index_leaves_manifest(spark, tiny_corpus_path,
+                                                 tmp_path):
+    """Re-running build_index on a complete index derives nothing, so it
+    must not overwrite the build record with its own (no-op) numbers nor
+    commit snapshots."""
+    from search_engine_spark.operators import index_build
+
+    cfg = EngineConfig(num_buckets=4, shuffle_partitions=8)
+    pages = spark.read.parquet(tiny_corpus_path)
+    index_path = str(tmp_path / "idx")
+    index_build.build_index(spark, pages, index_path, cfg, resume_batches=1)
+    before = CatalogAdapter(index_path)._load()
+
+    again = index_build.build_index(spark, pages, index_path, cfg,
+                                    resume_batches=1)
+    after = CatalogAdapter(index_path)._load()
+    assert again["n_docs"] == before["build"]["n_docs"]
+    assert after["build"] == before["build"]
+    assert len(after["snapshots"]) == len(before["snapshots"])
+    assert after["properties"] == before["properties"]
+
+
 def test_file_level_resume_lineage(spark, tiny_corpus_path, tmp_path):
     """With a multi-file corpus and a bare scan, resume batches are input-
     FILE groups: the manifest records each batch's exact file list, every
