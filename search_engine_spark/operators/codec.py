@@ -14,10 +14,10 @@ indexer.py:89-116); the varbyte/delta layout follows the standard IR
 literature (e.g. Manning et al., IIR ch.5).
 
 One writer: ``_encode_group_batch`` is the only code that builds a blob
-and its header. The build's streaming encoder
-(``encode_sorted_postings``) feeds it whole groups; the fold
-(index_build.merge_derive_tables) feeds it fresh postings plus the old
-blobs they extend, and it splices the new tail onto each old list's kept
+and its header. The streaming encoder (``encode_sorted_postings``) feeds
+it whole groups; a fold into existing postings
+(index_build.splice_pairs) feeds it fresh postings plus the old blobs
+they extend, and it splices the new tail onto each old list's kept
 blocks. ``encode_posting_list`` is a one-group call into it. One reader:
 ``_decode_blocks`` decodes any set of (blob, block) pairs in one pass;
 ``decode_blobs`` is its every-block entry point.
@@ -36,8 +36,17 @@ Blob layout (little-endian uint32 header):
 from __future__ import annotations
 
 import numpy as np
+import pyspark.sql.types as T
 
 from search_engine_spark.config import EngineConfig
+
+#: the postings table's rows: one per (bucket, term) posting list
+POSTINGS_SCHEMA = T.StructType([
+    T.StructField("bucket", T.IntegerType(), False),
+    T.StructField("term", T.StringType(), False),
+    T.StructField("local_df", T.LongType(), False),
+    T.StructField("blob", T.BinaryType(), False),
+])
 
 _HDR = np.dtype("<u4")
 
@@ -333,32 +342,21 @@ def _encode_group_batch(
 
 
 def encode_sorted_postings(sorted_rows, cfg: EngineConfig):
-    """Streaming group encoder over range-partitioned, sorted posting rows.
+    """Streaming group encoder over clustered, sorted posting rows.
 
-    Input: (bucket, term, doc_id, doc_length, tf) rows, range-partitioned
-    on (bucket, term) and sorted by (bucket, term, doc_id) within each
-    partition — equal keys land in one partition, so every group is
+    Input: (bucket, term, doc_id, doc_length, tf) rows from
+    ``index_build.sorted_posting_rows``: exchanged so that every
+    (bucket, term) group lands wholly in one partition (whole buckets via
+    ``bucket_exchange``, or a (bucket, term) hash) and sorted by
+    (bucket, term, doc_id) within each partition, so every group is
     contiguous within a partition's batch stream. The encoder walks the
     flat Arrow batches, slices each (bucket, term) run as numpy views and
     emits one compressed row per group, carrying the partial tail group
     across batch boundaries. No aggregation buffers, no join, no
     per-posting Python objects — this IS the reference's external k-way
-    merge (indexer.py:118-206) re-expressed as Spark's range shuffle plus
+    merge (indexer.py:118-206) re-expressed as Spark's shuffle sort plus
     a single streaming pass.
     """
-    from pyspark.sql.types import (
-        BinaryType, IntegerType, LongType, StringType, StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("bucket", IntegerType(), False),
-            StructField("term", StringType(), False),
-            StructField("local_df", LongType(), False),
-            StructField("blob", BinaryType(), False),
-        ]
-    )
     block_size = cfg.block_size
 
     def fn(batches):
@@ -431,5 +429,5 @@ def encode_sorted_postings(sorted_rows, cfg: EngineConfig):
 
     return sorted_rows.select(
         "bucket", "term", "doc_id", "doc_length", "tf"
-    ).mapInArrow(fn, schema=schema)
+    ).mapInArrow(fn, schema=POSTINGS_SCHEMA)
 

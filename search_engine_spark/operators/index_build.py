@@ -9,11 +9,11 @@ wide aggregation — Spark's sort-merge shuffle IS the k-way merge. Layout is
 - a hot term (stopword-adjacent high-DF token) is split across all buckets —
   the two-stage (term, bucket) → term aggregation is the skew salting the
   north_star calls for, with bucket as the salt;
-- each bucket is a self-contained shard over its doc range: query-time DAAT
-  intersection runs partition-parallel with a local top-k per shard and one
-  tiny global TakeOrderedAndProject;
-- global df/idf comes from a second, small aggregation over per-bucket
-  partials (map-side combine does most of the work).
+- each bucket is a self-contained shard over its doc range: query-time
+  scoring runs partition-parallel with a local top-k per shard, and the
+  driver merges the shards' candidates into the global top-k;
+- global df/idf comes from a second, small aggregation over the per-bucket
+  ``local_df`` of the encoded postings.
 
 Index finalization semantics replicate the reference merge loop
 (indexer.py:156-173, SURVEY.md §2.5 M5-M7):
@@ -28,18 +28,23 @@ Index finalization semantics replicate the reference merge loop
 
 Tables written under ``index_path`` (parquet + manifest, Iceberg-shaped):
 ``parsed`` (staged parse output, the resume checkpoint), ``postings``,
-``term_stats``, ``doc_stats``, ``corpus_stats``.
+``term_stats``, ``doc_stats``, ``corpus_stats``, the vocabulary states
+``vocab_capitals`` / ``vocab_entities`` and, with topical terms,
+``doc_stats_topical``. One function derives them all
+(``derive_index_tables``): the build folds the whole parse into empty
+tables, streaming compaction folds one new parse batch into the committed
+ones.
 """
 
 from __future__ import annotations
 
 import functools
 import math
+import operator
 import time
 
 import numpy as np
 import pyspark.sql.functions as F
-import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
 from search_engine_spark.config import EngineConfig
@@ -198,56 +203,58 @@ def sorted_posting_rows(parsed: DataFrame, config: EngineConfig) -> DataFrame:
     )
 
 
-def capitals_state(parsed: DataFrame) -> DataFrame:
+def _union(old: DataFrame | None, new: DataFrame) -> DataFrame:
+    """``new`` appended to ``old`` (just ``new`` when there is no old)."""
+    return new if old is None else old.unionByName(new)
+
+
+def capitals_state(rows: DataFrame) -> DataFrame:
     """A5 raw state: bool AND across docs of the per-doc capital flag
     (min ≡ AND). Associative — two corpora's states fold with another min,
-    which is what lets incremental compaction skip the full parsed scan."""
+    which is what lets a fold skip the full parsed scan."""
     return (
-        parsed.select(F.explode("capitals").alias("kv"))
+        rows.select(F.explode("capitals").alias("kv"))
         .select(F.col("kv.term").alias("term"), F.col("kv.cap").alias("cap"))
         .groupBy("term")
         .agg(F.min("cap").alias("always_cap"))
     )
 
 
-def entity_state(parsed: DataFrame) -> DataFrame:
+def entity_state(rows: DataFrame) -> DataFrame:
     """A4 raw state: per-doc-distinct entity counts (entities is a set per
     doc). Additive across corpora."""
     return (
-        parsed.select(F.explode("entities").alias("entity"))
+        rows.select(F.explode("entities").alias("entity"))
         .groupBy("entity")
         .agg(F.count("*").alias("entity_count"))
     )
 
 
+def _fold_state(old: DataFrame | None, new: DataFrame, key: str,
+                value: str, combine, empty) -> DataFrame:
+    """Per-``key`` state ``new`` folded into ``old`` (just ``new`` when
+    there is no old): a full outer join, ``combine`` of both sides'
+    ``value``, a side without the key counting as ``empty``."""
+    if old is None:
+        return new
+    o, n = (F.coalesce(F.col(f"{side}.{value}"), F.lit(empty))
+            for side in ("o", "n"))
+    return old.alias("o").join(new.alias("n"), key, "full_outer").select(
+        key, combine(o, n).alias(value))
+
+
 def build_vocabulary(
-    parsed: DataFrame | None,
-    df_raw: DataFrame | None = None,
-    capitals: DataFrame | None = None,
-    entity_counts: DataFrame | None = None,
+    df_raw: DataFrame, capitals: DataFrame, entity_counts: DataFrame,
 ) -> DataFrame:
     """Vocabulary with final (possibly uppercased) term and global df.
 
     Returns (term, final_term, df) for surviving terms only. ``df_raw``
-    (term, df) is normally derived from the already-encoded postings table
-    — ``sum(local_df)`` over the per-(bucket, term) rows, a |vocab|·buckets
-    aggregation instead of re-exploding and re-shuffling the full
-    (doc, term) relation a second time. Falls back to the explode when no
-    postings are available (direct callers / tests). ``capitals`` /
-    ``entity_counts`` likewise default to aggregating ``parsed`` but can be
-    supplied pre-folded (incremental compaction folds the persisted
-    ``vocab_capitals`` / ``vocab_entities`` state with the fresh batch's
-    aggregate instead of re-scanning the corpus).
+    (term, df) comes from the encoded postings table — ``sum(local_df)``
+    over the per-(bucket, term) rows, a |vocab|·buckets aggregation
+    instead of re-exploding the full (doc, term) relation; ``capitals``
+    and ``entity_counts`` are the persisted ``vocab_capitals`` /
+    ``vocab_entities`` states.
     """
-    if df_raw is None:
-        df_raw = _explode_terms(parsed).groupBy("term").agg(
-            F.count("*").alias("df")
-        )
-    if capitals is None:
-        capitals = capitals_state(parsed)
-    if entity_counts is None:
-        entity_counts = entity_state(parsed)
-
     vocab = (
         df_raw
         # M6 (faithful no-op): drop term if it IS an entity key with count<2
@@ -522,9 +529,11 @@ def build_index(
     """Run the full index build; returns build metrics.
 
     Stage A parses the corpus (narrow, no shuffle) and stages the result —
-    the checkpoint boundary for resume. Stage B derives all index tables
-    from the staged parse with exactly two wide shuffles: one groupBy
-    (bucket, term) for postings and one small groupBy(term) for stats.
+    the checkpoint boundary for resume. Stage B derives every index table
+    from the staged parse (``derive_index_tables``): the postings take one
+    exchange of the parsed rows (whole buckets, or a (bucket, term) hash
+    when buckets are fewer than shuffle partitions) plus a sort within
+    partitions; the stats and vocabulary states are small aggregations.
     """
     cfg = config or EngineConfig()
     cat = CatalogAdapter(index_path)
@@ -565,16 +574,8 @@ def build_index(
             )
         cat.finalize_batched_table("parsed")
     require_parsed_docs(cat)
-    # Read-side parallelism for the staged table comes from split sizing
-    # (EngineConfig.files_max_partition_bytes / files_open_cost_bytes):
-    # a repartition here would re-shuffle the full parsed relation in every
-    # downstream job; split-size tuning gives the same fan-out for free.
-    # read_table (not a direct parquet read) so Iceberg-routed builds read
-    # the table they actually wrote; `batch` is the lineage column in both
-    # modes (partition-discovered on parquet, explicit on Iceberg).
-    parsed = cat.read_table(spark, "parsed").drop("batch")
     t_parse = time.time()
-    stage_sec, n_docs, _avg_dl = derive_index_tables(spark, cat, parsed, cfg)
+    stage_sec, n_docs, _avg_dl = derive_index_tables(spark, cat, cfg)
 
     wall = time.time() - t0
     metrics = {
@@ -592,63 +593,131 @@ def build_index(
 
 
 def derive_index_tables(
-    spark: SparkSession, cat: CatalogAdapter, parsed: DataFrame,
-    cfg: EngineConfig,
+    spark: SparkSession, cat: CatalogAdapter, cfg: EngineConfig,
+    batch_id: str | None = None,
 ) -> tuple[dict, int, float]:
-    """Stages B1-B3: derive every index table from the staged parse.
+    """Stages B1-B3: fold the parsed rows each index table has not yet
+    absorbed into that table. Returns ``(stage_sec, n_docs, avg_dl)``.
 
-    Skips any table already committed in the manifest (resume semantics);
-    also used by streaming compaction (streaming/incremental.py), which
-    appends new parsed batches, drops the derived tables, and re-derives —
-    the expensive parse stage is never recomputed. Returns
-    ``(stage_sec, n_docs, avg_dl)``.
+    - ``batch_id=None`` (build, table-level resume, compaction's full
+      re-derive): a missing table is derived from all of ``parsed``; a
+      committed table has absorbed every row and is skipped.
+    - ``batch_id`` given (streaming compaction): every committed table
+      folds in that one ``parsed`` batch.
+
+    Each table is ``write(combine(old, new(rows)))``, with ``old`` None
+    when there is nothing to fold into. Per table:
+
+    - ``corpus_stats`` — the rows' counts plus the old row's (avg =
+      total / n).
+    - ``doc_stats`` (+ ``doc_stats_topical``) — per-doc rows have no
+      global dependencies: old rows pass through, new rows are appended
+      (glove vectors included).
+    - ``postings`` — the new rows' streaming encode. Folded into old
+      postings, the (bucket, term) groups that gained no docs pass through
+      BYTE-IDENTICAL (no decode, no shuffle: a broadcast anti-join against
+      the new group keys), new-only groups are written as encoded, and
+      groups on both sides append the new postings (``splice_pairs``);
+      batch-monotone doc ids put every new id above every old one. A blob
+      depends only on its (doc_id, doc_length, tf) rows, never on avg_dl,
+      so untouched rows stay valid however far the corpus stats move.
+    - ``vocab_capitals`` (AND) / ``vocab_entities`` (sum) — the new
+      rows' per-term state outer-joined to the old one, so the full parse
+      is never re-scanned.
+    - ``term_stats`` — df from the postings (a (term, local_df) column
+      scan) and the vocabulary states.
+
+    All writes are atomic per table (catalog _tmp + rename). After the
+    last one, ``corpus_stats.n_docs`` must equal the rows the manifest
+    records for ``parsed``; only then is the ``derived_from_batches``
+    staleness stamp committed, so a crash or a mismatch leaves it stale
+    and a compaction replay re-derives.
     """
+    from search_engine_spark.operators.codec import encode_sorted_postings
+
     stage_sec, mark = _stage_timer()
+    # read_table (not a direct parquet read) so Iceberg-routed builds read
+    # the table they actually wrote; `batch` is the lineage column in both
+    # modes (partition-discovered on parquet, explicit on Iceberg).
+    # Read-side parallelism comes from split sizing
+    # (EngineConfig.files_max_partition_bytes / files_open_cost_bytes),
+    # not a repartition, which would re-shuffle the parse in every job.
+    parsed = cat.read_table(spark, "parsed")
+    batch = (None if batch_id is None
+             else parsed.filter(F.col("batch") == batch_id).drop("batch"))
+    parsed = parsed.drop("batch")
+
+    def pending(table: str) -> tuple[DataFrame | None, DataFrame | None]:
+        """``(old, rows)``: the committed ``table`` (None if missing) and
+        the parsed rows it has not absorbed (None if none)."""
+        if not cat.has_table(table):
+            return None, parsed
+        if batch is None:
+            return None, None
+        return cat.read_table(spark, table), batch
 
     # ---- stage B1: corpus + doc stats -------------------------------------
-    if not cat.has_table("corpus_stats"):
-        stats = parsed.agg(
-            F.count("*").alias("n_docs"),
-            F.avg("doc_length").alias("avg_doc_length"),
-            F.sum("doc_length").alias("total_tokens"),
+    old, rows = pending("corpus_stats")
+    if rows is None:  # absorbed every row: only read its counts
+        old = cat.read_table(spark, "corpus_stats")
+    n_docs = total = 0
+    if old is not None:
+        row = old.collect()[0]
+        n_docs, total = int(row["n_docs"]), int(row["total_tokens"])
+    if rows is not None:
+        n, s = rows.agg(F.count("*"), F.sum("doc_length")).collect()[0]
+        n_docs, total = n_docs + n, total + (s or 0)
+        # one JVM-side row (a local list would start Python workers);
+        # total / n_docs rounds once, as Spark's avg(doc_length) does
+        cat.write_table(
+            spark.range(1, numPartitions=1).select(
+                F.lit(n_docs).cast("long").alias("n_docs"),
+                F.lit(total / n_docs).alias("avg_doc_length"),
+                F.lit(total).cast("long").alias("total_tokens"),
+            ),
+            "corpus_stats",
         )
-        cat.write_table(stats, "corpus_stats")
-    if not cat.has_table("doc_stats"):
-        doc_stats = parsed.select(
+    avg_dl = total / n_docs
+
+    old, rows = pending("doc_stats")
+    if rows is not None:
+        doc_stats = rows.select(
             "bucket", "doc_id", "url", "warc_ts", "doc_length",
             "max_tf", "unique_terms",
         )
         if cfg.glove_path:
-            doc_stats = _with_glove_vec(spark, parsed, cfg)
+            doc_stats = _with_glove_vec(spark, rows, cfg)
         # cluster whole buckets per task before the partitioned write —
         # without this every input split writes a file into every bucket
         # directory (splits × buckets tiny files)
         cat.write_table(
-            bucket_exchange(doc_stats, cfg),
+            _union(old, bucket_exchange(doc_stats, cfg)),
             "doc_stats", partition_by=["bucket"],
         )
-    if cfg.topical_terms and not cat.has_table("doc_stats_topical"):
-        cat.write_table(
-            _topical_rows(spark, cat, parsed, cfg),
-            "doc_stats_topical", partition_by=["topic"],
-        )
+    if cfg.topical_terms:
+        old, rows = pending("doc_stats_topical")
+        if rows is not None:
+            cat.write_table(
+                _union(old, _topical_rows(spark, cat, rows, cfg)),
+                "doc_stats_topical", partition_by=["topic"],
+            )
     mark("stats")
 
-    # ---- stage B2: postings — ONE range shuffle + streaming encode --------
-    cstats = cat.read_table(spark, "corpus_stats").collect()[0]
-    n_docs = int(cstats["n_docs"])
-    avg_dl = float(cstats["avg_doc_length"])
-
-    if not cat.has_table("postings"):
-        from search_engine_spark.operators.codec import encode_sorted_postings
-
-        encoded = encode_sorted_postings(sorted_posting_rows(parsed, cfg), cfg)
-        # range partitioning already clusters by bucket → the partitioned
-        # write needs no extra repartition
-        cat.write_table(
-            encoded, "postings", partition_by=["bucket"],
-            max_records_per_file=cfg.max_records_per_file,
-        )
+    # ---- stage B2: postings — ONE exchange + streaming encode -------------
+    old, rows = pending("postings")
+    if rows is not None:
+        # sorted_posting_rows already clusters whole (bucket, term) groups
+        # per partition, so the partitioned write needs no repartition
+        encoded = encode_sorted_postings(sorted_posting_rows(rows, cfg), cfg)
+        out = (encoded if old is None
+               else _spliced_postings(old, encoded.persist(), cfg))
+        try:
+            cat.write_table(
+                out, "postings", partition_by=["bucket"],
+                max_records_per_file=cfg.max_records_per_file,
+            )
+        finally:
+            encoded.unpersist()
     mark("postings")
 
     # ---- stage B3: vocabulary (prune + rewrite) + term stats --------------
@@ -663,14 +732,23 @@ def derive_index_tables(
     # local_df — a |vocab|·buckets-row aggregation) instead of a second
     # full explode+shuffle of the (doc, term) relation.
     # The raw A4/A5 per-term states are persisted alongside term_stats so
-    # incremental compaction can FOLD a fresh batch into them (min / sum)
-    # instead of re-scanning the whole parsed relation for the vocabulary
-    # quirks — the last full-corpus pass the merge path had.
-    if not cat.has_table("vocab_capitals"):
-        cat.write_table(capitals_state(parsed), "vocab_capitals")
-    if not cat.has_table("vocab_entities"):
-        cat.write_table(entity_state(parsed), "vocab_entities")
-    if not cat.has_table("term_stats"):
+    # a fold combines the new rows' states with them (min / sum) instead
+    # of re-scanning the whole parsed relation for the vocabulary quirks.
+    old, rows = pending("vocab_capitals")
+    if rows is not None:
+        cat.write_table(
+            _fold_state(old, capitals_state(rows), "term", "always_cap",
+                        F.least, True),
+            "vocab_capitals",
+        )
+    old, rows = pending("vocab_entities")
+    if rows is not None:
+        cat.write_table(
+            _fold_state(old, entity_state(rows), "entity", "entity_count",
+                        operator.add, 0),
+            "vocab_entities",
+        )
+    if batch is not None or not cat.has_table("term_stats"):
         _write_term_stats(spark, cat)
     mark("term_stats")
 
@@ -694,8 +772,61 @@ def derive_index_tables(
         })
     else:
         _check_config_vs_properties(cfg, props)
+    n_parsed = sum(e["rows"] for e in cat.batch_entries("parsed"))
+    if n_docs != n_parsed:
+        raise ValueError(
+            f"corpus_stats of {cat.root} counts {n_docs} docs but the "
+            f"manifest records {n_parsed} parsed rows: the derived tables "
+            "did not absorb the parse exactly once; derived_from_batches "
+            "is not stamped"
+        )
     _stamp_derived(cat)
     return stage_sec, n_docs, avg_dl
+
+
+def _spliced_postings(old: DataFrame, fresh: DataFrame,
+                      cfg: EngineConfig) -> DataFrame:
+    """The postings ``old`` with the encoded ``fresh`` lists folded in:
+    untouched old rows pass through, fresh-only rows are taken as they
+    are, and lists on both sides are spliced (``splice_pairs``).
+    ``fresh`` is read three times; the caller persists it."""
+    from search_engine_spark.operators.codec import POSTINGS_SCHEMA
+
+    cols = POSTINGS_SCHEMA.names
+    # broadcast the fresh group keys: the blob-carrying old table must
+    # not shuffle just to find out which rows pass through untouched
+    # (at cluster scale AQE demotes this to a shuffled hash join when
+    # the increment outgrows the broadcast threshold)
+    keys = F.broadcast(fresh.select("bucket", "term"))
+    untouched = old.join(keys, ["bucket", "term"], "left_anti")
+    pair = (
+        old.join(keys, ["bucket", "term"], "left_semi").alias("o")
+        .join(fresh.alias("f"), ["bucket", "term"])
+        .select(
+            "bucket", "term",
+            F.col("o.blob").alias("old_blob"),
+            F.col("f.blob").alias("new_blob"),
+        )
+    )
+    merged_both = pair.mapInPandas(splice_pairs(cfg), schema=POSTINGS_SCHEMA)
+    fresh_only = fresh.join(
+        old.select("bucket", "term"), ["bucket", "term"], "left_anti",
+    )
+    # Only the CHANGED rows exchange: merged/fresh-only rows come out
+    # clustered by join key, so they take one increment-sized bucket
+    # exchange + sort. The untouched bulk is read from a table already
+    # partitioned by bucket dirs and term-sorted within files — it flows
+    # scan → broadcast anti-join → write with NO shuffle and no sort
+    # (the blob bytes never leave the task that read them). Cost: the
+    # table's file count grows by ~(changed tasks) per fold instead of
+    # being re-packed; a periodic full rebuild (or any full re-derive)
+    # re-compacts it. At 100 TB this is the difference between shuffling
+    # the whole postings table per fold and shuffling the increment.
+    changed = encoded_rows_exchange(
+        merged_both.select(*cols).unionByName(fresh_only.select(*cols)),
+        cfg,
+    ).sortWithinPartitions("bucket", "term")
+    return untouched.select(*cols).unionByName(changed)
 
 
 def _stage_timer():
@@ -742,9 +873,9 @@ def _write_term_stats(spark: SparkSession, cat: CatalogAdapter) -> None:
         .agg(F.sum("local_df").alias("df"))
     )
     vocab = build_vocabulary(
-        None, df_raw=df_from_postings,
-        capitals=cat.read_table(spark, "vocab_capitals"),
-        entity_counts=cat.read_table(spark, "vocab_entities"),
+        df_from_postings,
+        cat.read_table(spark, "vocab_capitals"),
+        cat.read_table(spark, "vocab_entities"),
     )
     cat.write_table(
         vocab.select(F.col("final_term").alias("term"), "df",
@@ -763,188 +894,10 @@ def _stamp_derived(cat: CatalogAdapter) -> None:
         cat.set_properties({"derived_from_batches": batches})
 
 
-#: the postings table's rows (the fold's output)
-_POSTING_MERGE_SCHEMA = T.StructType([
-    T.StructField("bucket", T.IntegerType(), False),
-    T.StructField("term", T.StringType(), False),
-    T.StructField("local_df", T.LongType(), False),
-    T.StructField("blob", T.BinaryType(), False),
-])
-_POSTING_MERGE_COLS = _POSTING_MERGE_SCHEMA.names
-
-
-def merge_derive_tables(
-    spark: SparkSession, cat: CatalogAdapter, batch_id: str,
-    cfg: EngineConfig,
-) -> tuple[dict, int, float]:
-    """Incremental derive: fold ONE fresh parsed batch into the derived
-    tables without recomputing the untouched bulk.
-
-    Per table:
-
-    - ``corpus_stats`` — fold the increment into the old row (counts and
-      token sums are additive; avg = total/n).
-    - ``doc_stats`` (+ ``doc_stats_topical``) — per-doc rows have no
-      global dependencies, so old rows pass through and only the fresh
-      batch is computed (glove vectors included).
-    - ``postings`` — the (bucket, term) groups that gained no new docs
-      pass through BYTE-IDENTICAL (no decode, no shuffle: a broadcastable
-      anti-join against the fresh group keys); fresh-only groups come
-      straight from the streaming encoder; groups on both sides append the
-      fresh postings, since batch-monotone doc ids put every fresh id
-      above every old one (``splice_pairs``: the batch encoder re-encodes
-      each old list's last block with the fresh postings and keeps the
-      earlier blocks byte for byte). A blob depends only on its
-      (doc_id, doc_length, tf) rows, never on avg_dl, so the untouched
-      rows stay valid however far the increment moves the corpus stats.
-    - ``term_stats`` — df re-aggregates from the merged postings (a
-      (term, local_df) column scan); the persisted vocabulary states
-      (``vocab_capitals`` AND, ``vocab_entities`` sum) fold in the fresh
-      batch, so the full parsed relation is never re-scanned.
-
-    Cost shape: untouched groups cost table IO only; touched groups cost
-    O(block_size + increment) each, however hot the term.
-
-    All writes are atomic per table (catalog _tmp + rename); the caller
-    commits the ``derived_from_batches`` staleness stamp after the last
-    write. Returns ``(stage_sec, n_docs, avg_dl)`` like
-    ``derive_index_tables``.
-    """
-    from search_engine_spark.operators.codec import encode_sorted_postings
-
-    stage_sec, mark = _stage_timer()
-    fresh = (
-        cat.read_table(spark, "parsed")
-        .filter(F.col("batch") == batch_id)
-        .drop("batch")
-    )
-
-    # ---- corpus_stats: additive fold ---------------------------------------
-    old_stats = cat.read_table(spark, "corpus_stats").collect()[0]
-    inc = fresh.agg(
-        F.count("*").alias("n"), F.sum("doc_length").alias("s")
-    ).collect()[0]
-    n_docs = int(old_stats["n_docs"]) + int(inc["n"])
-    total_tokens = int(old_stats["total_tokens"]) + int(inc["s"] or 0)
-    avg_dl = total_tokens / n_docs
-    cat.write_table(
-        spark.createDataFrame(
-            [(n_docs, float(avg_dl), total_tokens)],
-            "n_docs bigint, avg_doc_length double, total_tokens bigint",
-        ),
-        "corpus_stats",
-    )
-
-    # ---- doc_stats: append-only (per-doc rows, no global deps) -------------
-    fresh_ds = fresh.select(
-        "bucket", "doc_id", "url", "warc_ts", "doc_length", "max_tf",
-        "unique_terms",
-    )
-    if cfg.glove_path:
-        fresh_ds = _with_glove_vec(spark, fresh, cfg)
-    old_ds = cat.read_table(spark, "doc_stats")
-    cat.write_table(
-        old_ds.unionByName(bucket_exchange(fresh_ds, cfg)),
-        "doc_stats", partition_by=["bucket"],
-    )
-    if cfg.topical_terms and cat.has_table("doc_stats_topical"):
-        cat.write_table(
-            cat.read_table(spark, "doc_stats_topical")
-            .unionByName(_topical_rows(spark, cat, fresh, cfg)),
-            "doc_stats_topical", partition_by=["topic"],
-        )
-    mark("stats")
-
-    # ---- postings: passthrough / merge / fresh-only -------------------------
-    fresh_enc = encode_sorted_postings(sorted_posting_rows(fresh, cfg), cfg)
-    fresh_enc.persist()
-    try:
-        old_post = cat.read_table(spark, "postings")
-        # broadcast the fresh group keys: the blob-carrying old table must
-        # not shuffle just to find out which rows pass through untouched
-        # (at cluster scale AQE demotes this to a shuffled hash join when
-        # the increment outgrows the broadcast threshold)
-        keys = F.broadcast(fresh_enc.select("bucket", "term"))
-        untouched = old_post.join(keys, ["bucket", "term"], "left_anti")
-        pair = (
-            old_post.join(keys, ["bucket", "term"], "left_semi").alias("o")
-            .join(fresh_enc.alias("f"), ["bucket", "term"])
-            .select(
-                "bucket", "term",
-                F.col("o.blob").alias("old_blob"),
-                F.col("f.blob").alias("new_blob"),
-            )
-        )
-        merged_both = pair.mapInPandas(
-            splice_pairs(cfg), schema=_POSTING_MERGE_SCHEMA)
-        fresh_only = fresh_enc.join(
-            old_post.select("bucket", "term"), ["bucket", "term"],
-            "left_anti",
-        )
-        # Only the CHANGED rows exchange: merged/fresh-only rows come out
-        # clustered by join key, so they take one increment-sized bucket
-        # exchange + sort. The untouched bulk is read from a table already
-        # partitioned by bucket dirs and term-sorted within files — it flows
-        # scan → broadcast anti-join → write with NO shuffle and no sort
-        # (the blob bytes never leave the task that read them). Cost: the
-        # table's file count grows by ~(changed tasks) per fold instead of
-        # being re-packed; a periodic full rebuild (or any full re-derive)
-        # re-compacts it. At 100 TB this is the difference between shuffling
-        # the whole postings table per fold and shuffling the increment.
-        changed = encoded_rows_exchange(
-            merged_both.select(*_POSTING_MERGE_COLS)
-            .unionByName(fresh_only.select(*_POSTING_MERGE_COLS)),
-            cfg,
-        ).sortWithinPartitions("bucket", "term")
-        cat.write_table(
-            untouched.select(*_POSTING_MERGE_COLS).unionByName(changed),
-            "postings", partition_by=["bucket"],
-            max_records_per_file=cfg.max_records_per_file,
-        )
-    finally:
-        fresh_enc.unpersist()
-    mark("postings")
-
-    # ---- term_stats: df from merged postings + FOLDED vocabulary state -----
-    # The A4/A5 quirk states fold associatively (min / sum), so the merge
-    # never re-scans the full parsed relation: old state (persisted at
-    # build time) outer-joins the fresh batch's aggregate. df still
-    # re-aggregates from the merged postings — a two-column columnar scan
-    # of (term, local_df), no blob bytes read.
-    caps_new = (
-        cat.read_table(spark, "vocab_capitals").alias("o")
-        .join(capitals_state(fresh).alias("f"), "term", "full_outer")
-        .select(
-            "term",
-            F.least(
-                F.coalesce(F.col("o.always_cap"), F.lit(True)),
-                F.coalesce(F.col("f.always_cap"), F.lit(True)),
-            ).alias("always_cap"),
-        )
-    )
-    ents_new = (
-        cat.read_table(spark, "vocab_entities").alias("o")
-        .join(entity_state(fresh).alias("f"), "entity", "full_outer")
-        .select(
-            "entity",
-            (F.coalesce(F.col("o.entity_count"), F.lit(0))
-             + F.coalesce(F.col("f.entity_count"), F.lit(0))
-             ).alias("entity_count"),
-        )
-    )
-    cat.write_table(caps_new, "vocab_capitals")
-    cat.write_table(ents_new, "vocab_entities")
-    _write_term_stats(spark, cat)
-    mark("term_stats")
-
-    _stamp_derived(cat)
-    return stage_sec, n_docs, avg_dl
-
-
 def splice_pairs(cfg: EngineConfig):
     """``mapInPandas`` kernel of the fold: extend each old posting list
     (``old_blob``) by the fresh postings in ``new_blob``, rows typed
-    ``_POSTING_MERGE_SCHEMA``.
+    ``codec.POSTINGS_SCHEMA``.
 
     The fresh blobs decode in one batched pass; the batch encoder splices
     each tail onto the old list's kept blocks (codec._encode_group_batch).

@@ -9,9 +9,9 @@ Two roles:
 
 2. ``incremental_index_update`` — incremental index maintenance analog of
    the reference's one-shot build (it had none): new web-page files landing
-   in a directory are parsed in micro-batches and appended to a staging
-   postings table partitioned by (bucket, term); a compaction merge folds
-   staging into the main index. Used by tests/test_streaming.py.
+   in a directory are parsed in micro-batches and their parsed rows are
+   appended to a staging table; ``compact_staging`` folds staging into the
+   main index. Used by tests/test_streaming.py.
 """
 
 from __future__ import annotations
@@ -179,17 +179,19 @@ def compact_staging(
        as a new batch of the ``parsed`` table, with lineage in the
        manifest; its doc ids are re-assigned in the batch's slot
        (``index_build.next_parsed_slot``), above every existing id;
-    2. INCREMENTAL derive (``merge_derive_tables``): posting rows whose
-       (bucket, term) group gained no new docs pass through the exchange
-       byte-identical (no decode); touched groups tail-append the fresh
-       postings; doc_stats appends the fresh rows; corpus_stats folds
-       the increment. The expensive parse is never recomputed, and
-       neither is the untouched bulk of the postings table.
-    3. fall back to the full re-derive (``derive_index_tables`` over the
-       whole parsed relation, after dropping every derived table) when
-       the incremental preconditions fail — a table is missing, the index
-       is Iceberg-backed, or the ``derived_from_batches`` stamp says the
-       derived tables are stale (a previous compaction crashed mid-swap).
+    2. INCREMENTAL derive (``derive_index_tables`` with the new
+       ``batch_id``): posting rows whose (bucket, term) group gained no
+       new docs pass through byte-identical (no decode, no exchange);
+       touched groups tail-append the fresh postings; doc_stats appends
+       the fresh rows; corpus_stats folds the increment. The expensive
+       parse is never recomputed, and neither is the untouched bulk of
+       the postings table.
+    3. fall back to the full re-derive (``derive_index_tables`` with no
+       batch, over the whole parsed relation, after dropping every
+       derived table) when the incremental preconditions fail — a table
+       is missing, the index is Iceberg-backed, or the
+       ``derived_from_batches`` stamp says the derived tables are stale
+       (a previous compaction crashed mid-swap).
 
     An index without the ``doc_id_mode: "monotone"`` manifest stamp was
     built with url-hash doc ids; compacting into it raises ``ValueError``
@@ -211,8 +213,8 @@ def compact_staging(
     from pyspark.sql import Window
 
     from search_engine_spark.operators.index_build import (
-        config_from_properties, derive_index_tables, merge_derive_tables,
-        next_parsed_slot, require_parsed_docs,
+        config_from_properties, derive_index_tables, next_parsed_slot,
+        require_parsed_docs,
     )
     from search_engine_spark.operators.parse import assign_doc_ids
     from search_engine_spark.sources.catalog import CatalogAdapter
@@ -233,14 +235,14 @@ def compact_staging(
     # Staleness gate, computed BEFORE this invocation appends anything:
     # the derived tables are trustworthy only if they absorbed every batch
     # already in ``parsed``. A crash after a previous append_batch (or mid
-    # merge_derive_tables) leaves the stamp pointing at an older batch
-    # list. If NEW docs were staged before the replay, the empty-staging
-    # branch never runs — so this check must also gate the incremental
-    # path below, or merge_derive_tables would fold compact-2 over tables
-    # that never absorbed compact-1 (possibly half-updated: corpus_stats
-    # folded but postings not) and then re-stamp with the FULL batch list,
-    # permanently masking the gap. A missing stamp is treated as stale:
-    # it means no derive ever completed its final commit.
+    # fold) leaves the stamp pointing at an older batch list. If NEW docs
+    # were staged before the replay, the empty-staging branch never runs —
+    # so this check must also gate the incremental path below, or it would
+    # fold compact-2 into tables that never absorbed compact-1 (possibly
+    # half-updated: corpus_stats folded but postings not) and then
+    # re-stamp with the FULL batch list, permanently masking the gap. A
+    # missing stamp is treated as stale: it means no derive ever completed
+    # its final commit.
     stamp_ok = props.get("derived_from_batches") == sorted(
         map(str, cat.completed_batches("parsed"))
     )
@@ -283,8 +285,8 @@ def compact_staging(
                                   "staging_dir": staging_dir})
     fresh.unpersist()  # appended (or empty); all later reads go via parsed
 
-    # Iceberg routing: merge_derive_tables overwrites doc_stats/postings
-    # with plans that READ the same table. The parquet branch is safe
+    # Iceberg routing: the fold overwrites doc_stats/postings with plans
+    # that READ the same table. The parquet branch is safe
     # (write to _tmp, rename last); in Iceberg mode that write becomes a
     # self-referential REPLACE TABLE AS SELECT, which no test in this
     # jar-less sandbox can exercise — so Iceberg-backed indexes take the
@@ -309,14 +311,9 @@ def compact_staging(
                       "vocab_entities"):
             cat.drop_table(table)
 
-    if incremental_ok:
-        stage_sec, n_docs, avg_dl = merge_derive_tables(
-            spark, cat, batch_id, cfg
-        )
-    else:
-        parsed = cat.read_table(spark, "parsed").drop("batch")
-        stage_sec, n_docs, avg_dl = derive_index_tables(spark, cat, parsed,
-                                                        cfg)
+    stage_sec, n_docs, avg_dl = derive_index_tables(
+        spark, cat, cfg, batch_id if incremental_ok else None
+    )
     return {"n_docs": int(n_docs), "avg_dl": avg_dl,
             "batch_id": batch_id, "stage_sec": stage_sec,
             "incremental": incremental_ok}

@@ -1,7 +1,7 @@
 """The fold's tail splice must equal a from-scratch encode.
 
 The monotone-doc_id incremental merge (operators/index_build.py::
-merge_derive_tables) extends an encoded blob through the batch encoder
+derive_index_tables) extends an encoded blob through the batch encoder
 (codec._encode_group_batch with ``old=``): it decodes only the old list's
 last block, re-encodes it with the new postings, and keeps the earlier
 blocks byte for byte. Because every block restarts with an absolute doc
@@ -102,9 +102,8 @@ def test_fold_batch_mixes_single_and_multi_block_lists(spark):
     holding single-block and multi-block old lists, partial and full last
     blocks alike: every output blob equals a from-scratch encode, and the
     rows carry exactly the postings table's columns."""
-    from search_engine_spark.operators.index_build import (
-        _POSTING_MERGE_SCHEMA, splice_pairs,
-    )
+    from search_engine_spark.operators.codec import POSTINGS_SCHEMA
+    from search_engine_spark.operators.index_build import splice_pairs
 
     cfg = EngineConfig(block_size=16)
     rng = np.random.default_rng(21)
@@ -124,7 +123,7 @@ def test_fold_batch_mixes_single_and_multi_block_lists(spark):
         rows, "bucket int, term string, old_blob binary, new_blob binary",
     ).coalesce(1)
     out = pairs.mapInPandas(
-        splice_pairs(cfg), schema=_POSTING_MERGE_SCHEMA
+        splice_pairs(cfg), schema=POSTINGS_SCHEMA
     ).collect()
 
     assert sorted(r["term"] for r in out) == sorted(full)

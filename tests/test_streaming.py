@@ -241,12 +241,14 @@ def test_compaction_crash_before_derive_replays_safely(spark, dirs, tmp_path,
         spark, dirs["incoming"], dirs["staging"], dirs["checkpoint"], cfg
     )
 
-    real_merge = index_build.merge_derive_tables
+    real_derive = index_build.derive_index_tables
 
-    def boom(*a, **kw):
-        raise RuntimeError("simulated crash before derive")
+    def boom(spark, cat, cfg, batch_id=None):
+        if batch_id is not None:  # the incremental fold
+            raise RuntimeError("simulated crash before derive")
+        return real_derive(spark, cat, cfg, batch_id)
 
-    monkeypatch.setattr(index_build, "merge_derive_tables", boom)
+    monkeypatch.setattr(index_build, "derive_index_tables", boom)
     with pytest.raises(RuntimeError, match="simulated crash"):
         compact_staging(spark, idx, dirs["staging"], cfg)
 
@@ -261,7 +263,7 @@ def test_compaction_crash_before_derive_replays_safely(spark, dirs, tmp_path,
         map(str, cat.completed_batches("parsed"))
     )
 
-    monkeypatch.setattr(index_build, "merge_derive_tables", real_merge)
+    monkeypatch.setattr(index_build, "derive_index_tables", real_derive)
     out = compact_staging(spark, idx, dirs["staging"], cfg)
     assert out["batch_id"] is None  # replay appended nothing new
     assert out["incremental"] is False  # stale stamp → full re-derive
@@ -316,15 +318,17 @@ def test_crash_then_new_docs_staged_forces_full_rederive(spark, dirs,
         spark, dirs["incoming"], dirs["staging"], dirs["checkpoint"], cfg
     )
 
-    real_merge = index_build.merge_derive_tables
-    monkeypatch.setattr(
-        index_build, "merge_derive_tables",
-        lambda *a, **kw: (_ for _ in ()).throw(
-            RuntimeError("simulated crash before derive")),
-    )
+    real_derive = index_build.derive_index_tables
+
+    def boom(spark, cat, cfg, batch_id=None):
+        if batch_id is not None:  # the incremental fold
+            raise RuntimeError("simulated crash before derive")
+        return real_derive(spark, cat, cfg, batch_id)
+
+    monkeypatch.setattr(index_build, "derive_index_tables", boom)
     with pytest.raises(RuntimeError, match="simulated crash"):
         compact_staging(spark, idx, dirs["staging"], cfg)
-    monkeypatch.setattr(index_build, "merge_derive_tables", real_merge)
+    monkeypatch.setattr(index_build, "derive_index_tables", real_derive)
 
     # NEW docs land in staging before the replay — the non-empty branch
     pq.write_table(full.slice(240, 60),
