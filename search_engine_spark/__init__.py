@@ -4,7 +4,7 @@ A from-scratch rebuild of the capabilities of the reference IR engine
 (JonatanMilver/Search_Engine, studied at /root/reference — see SURVEY.md),
 re-expressed for Spark's execution model:
 
-- corpus parsing/tokenization as Arrow-batched ``mapInPandas`` stages
+- corpus parsing/tokenization as an Arrow-batched ``mapInArrow`` stage
   (vectorized transport; the token-level rules are pure Python for
   byte-identical parity with the reference semantics),
 - inverted-index construction as a document-partitioned (bucketed) wide

@@ -3,7 +3,7 @@
 Pure Python, no Spark imports — this module is shared by:
 
 - the Spark parse stage (``operators/parse.py``) which applies it per Arrow
-  batch inside ``mapInPandas`` (vectorized transport, per-batch Python loop —
+  batch inside ``mapInArrow`` (vectorized transport, per-batch Python loop —
   the only way to get byte/rank-identical semantics, cf. SURVEY.md §2.2),
 - driver-side query parsing (queries are tiny),
 - the single-process parity oracle (``tests/oracle.py``).

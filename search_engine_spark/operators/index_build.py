@@ -48,7 +48,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from search_engine_spark.config import EngineConfig
-from search_engine_spark.operators.parse import parse_corpus
+from search_engine_spark.operators.parse import parse_corpus, read_parsed
 from search_engine_spark.sources.catalog import CatalogAdapter
 
 
@@ -211,9 +211,16 @@ def _union(old: DataFrame | None, new: DataFrame) -> DataFrame:
 def capitals_state(rows: DataFrame) -> DataFrame:
     """A5 raw state: bool AND across docs of the per-doc capital flag
     (min ≡ AND). Associative — two corpora's states fold with another min,
-    which is what lets a fold skip the full parsed scan."""
+    which is what lets a fold skip the full parsed scan.
+
+    A doc's flags are its terms' non-null ``cap`` plus its ``capitals``
+    (the keys that are not terms); a batch staged before ``terms`` carried
+    ``cap`` reads it as null and holds every flag in ``capitals``."""
+    flags = F.concat(F.arrays_zip("terms.term", "terms.cap"),
+                     F.col("capitals"))
     return (
-        rows.select(F.explode("capitals").alias("kv"))
+        rows.select(F.explode(flags).alias("kv"))
+        .where(F.col("kv.cap").isNotNull())
         .select(F.col("kv.term").alias("term"), F.col("kv.cap").alias("cap"))
         .groupBy("term")
         .agg(F.min("cap").alias("always_cap"))
@@ -312,17 +319,15 @@ def _with_glove_vec(spark: SparkSession, parsed: DataFrame,
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         glove = glove_b.value
         for pdf in batches:
-            vecs = [
-                doc_vector((t["term"] for t in terms), glove, dim)
-                for terms in pdf["terms"]
-            ]
+            vecs = [doc_vector(terms, glove, dim) for terms in pdf["terms"]]
             out = pdf.drop(columns=["terms"])
             out["glove_vec"] = [np.asarray(v) for v in vecs]
             yield out
 
     return parsed.select(
         "bucket", "doc_id", "url", "warc_ts", "doc_length",
-        "max_tf", "unique_terms", "terms",
+        "max_tf", "unique_terms",
+        F.col("terms.term").alias("terms"),
     ).mapInPandas(fn, schema=schema)
 
 
@@ -603,7 +608,9 @@ def derive_index_tables(
       re-derive): a missing table is derived from all of ``parsed``; a
       committed table has absorbed every row and is skipped.
     - ``batch_id`` given (streaming compaction): every committed table
-      folds in that one ``parsed`` batch.
+      folds in that one ``parsed`` batch. A batch the
+      ``derived_from_batches`` stamp already lists raises ``ValueError``
+      before any write.
 
     Each table is ``write(combine(old, new(rows)))``, with ``old`` None
     when there is nothing to fold into. Per table:
@@ -635,6 +642,13 @@ def derive_index_tables(
     """
     from search_engine_spark.operators.codec import encode_sorted_postings
 
+    if batch_id is not None and batch_id in cat.properties().get(
+            "derived_from_batches", ()):
+        raise ValueError(
+            f"batch {batch_id!r} of {cat.root} is already in "
+            "derived_from_batches: folding it again would count it twice; "
+            "no table was written"
+        )
     stage_sec, mark = _stage_timer()
     # read_table (not a direct parquet read) so Iceberg-routed builds read
     # the table they actually wrote; `batch` is the lineage column in both
@@ -642,7 +656,7 @@ def derive_index_tables(
     # Read-side parallelism comes from split sizing
     # (EngineConfig.files_max_partition_bytes / files_open_cost_bytes),
     # not a repartition, which would re-shuffle the parse in every job.
-    parsed = cat.read_table(spark, "parsed")
+    parsed = read_parsed(spark, cat)
     batch = (None if batch_id is None
              else parsed.filter(F.col("batch") == batch_id).drop("batch"))
     parsed = parsed.drop("batch")
@@ -808,7 +822,7 @@ def _spliced_postings(old: DataFrame, fresh: DataFrame,
             F.col("f.blob").alias("new_blob"),
         )
     )
-    merged_both = pair.mapInPandas(splice_pairs(cfg), schema=POSTINGS_SCHEMA)
+    merged_both = pair.mapInArrow(splice_pairs(cfg), schema=POSTINGS_SCHEMA)
     fresh_only = fresh.join(
         old.select("bucket", "term"), ["bucket", "term"], "left_anti",
     )
@@ -895,7 +909,7 @@ def _stamp_derived(cat: CatalogAdapter) -> None:
 
 
 def splice_pairs(cfg: EngineConfig):
-    """``mapInPandas`` kernel of the fold: extend each old posting list
+    """``mapInArrow`` kernel of the fold: extend each old posting list
     (``old_blob``) by the fresh postings in ``new_blob``, rows typed
     ``codec.POSTINGS_SCHEMA``.
 
@@ -911,16 +925,18 @@ def splice_pairs(cfg: EngineConfig):
             _encode_group_batch, decode_blobs,
         )
 
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            ids, dls, tfs, n_new = decode_blobs(pdf["new_blob"].tolist())
+            ids, dls, tfs, n_new = decode_blobs(
+                batch.column("new_blob").to_pylist())
             ends = np.cumsum(n_new)
             yield _encode_group_batch(
-                pdf["bucket"].to_numpy(), pdf["term"].tolist(),
+                batch.column("bucket").to_numpy(),
+                batch.column("term").to_pylist(),
                 ids, dls, tfs, ends - n_new, ends, block_size,
-                old=pdf["old_blob"].tolist(),
-            ).to_pandas()
+                old=batch.column("old_blob").to_pylist(),
+            )
 
     return _merge
 

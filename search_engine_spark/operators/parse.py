@@ -1,25 +1,27 @@
 """Corpus parse stage: web_pages → per-doc index inputs.
 
 Spark mapping of the reference's reader+parser stages (reference
-reader.py:9-43, parser_module.py:104-191): one narrow Arrow-batched
-``mapInPandas`` pipeline — scan → column-pruned projection → tokenize.
-No shuffle; Catalyst pushes the column pruning into the parquet scan
-(only ``url, warc_ts, text`` are read, not ``html``).
+reader.py:9-43, parser_module.py:104-191): one narrow ``mapInArrow``
+pipeline — scan → column-pruned projection → tokenize. No shuffle;
+Catalyst pushes the column pruning into the parquet scan (only
+``url, warc_ts, text`` are read, not ``html``).
+
+One term list per doc: the reference keeps term → tf and term → capital
+flag as two dicts over the same tokens (parser_module.py:448-462); a
+``parsed`` row stores each term once, as (term, tf, cap) in ``terms``.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
-    ArrayType, BooleanType, IntegerType, StringType, StructField, StructType,
-    TimestampType,
+    ArrayType, BooleanType, IntegerType, LongType, StringType, StructField,
+    StructType, TimestampType,
 )
 
 from search_engine_spark.config import EngineConfig
+from search_engine_spark.sources.catalog import CatalogAdapter
 
 PARSED_SCHEMA = StructType(
     [
@@ -35,6 +37,8 @@ PARSED_SCHEMA = StructType(
                     [
                         StructField("term", StringType(), False),
                         StructField("tf", IntegerType(), False),
+                        # the doc's capital flag (A5); null: none tracked
+                        StructField("cap", BooleanType(), True),
                     ]
                 )
             ),
@@ -56,10 +60,34 @@ PARSED_SCHEMA = StructType(
     ]
 )
 
+#: a ``parsed`` table's rows as written (``parse_corpus``): the parse
+#: plus the ids ``assign_doc_ids`` attaches
+STAGED_SCHEMA = StructType(
+    PARSED_SCHEMA.fields + [StructField("doc_id", LongType(), False),
+                            StructField("bucket", IntegerType(), False)]
+)
+
+
+def read_parsed(spark: SparkSession, cat: CatalogAdapter) -> DataFrame:
+    """The committed ``parsed`` table (with its ``batch`` column), read
+    through ``STAGED_SCHEMA``. A batch written before ``terms`` carried
+    ``cap`` (its ``capitals`` list holds every flag) reads with that field
+    null, so old and new batches mix in one relation."""
+    return cat.read_table(spark, "parsed", schema=StructType(
+        STAGED_SCHEMA.fields + [StructField("batch", StringType())]))
+
 
 def _parse_batches(stemming: bool):
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """``mapInArrow`` kernel: (url, warc_ts, text) batches → parsed rows,
+    list columns built from flat values and offsets (no pandas, no
+    per-term Python objects). ``terms`` keeps the tokenizer's dict order,
+    which the glove vector follows; ``capitals`` keeps only the flags of
+    keys that are not terms (a stemmed token that stems to a stop word).
+    """
+    def fn(batches):
         # worker-side imports: keep the closure picklable and cheap
+        import pyarrow as pa
+
         from search_engine_spark.functions.textproc import parse_web_doc
 
         stemmer = None
@@ -68,32 +96,64 @@ def _parse_batches(stemming: bool):
 
             stemmer = Stemmer()
 
-        for pdf in batches:
+        def lists(offsets, values):
+            return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()),
+                                            values)
+
+        for batch in batches:
             # clean_text is intentionally NOT staged: no downstream index
             # table consumes it (the byte-identity invariant is enforced at
             # the function level, tests/test_textproc.py), and carrying the
             # full cleaned body would double the staged table's write volume
-            rows = {k: [] for k in (
-                "url", "warc_ts", "doc_length", "max_tf",
-                "unique_terms", "terms", "capitals", "entities")}
-            for url, ts, text in zip(pdf["url"], pdf["warc_ts"], pdf["text"]):
+            keep, urls, doc_length, max_tf, unique = [], [], [], [], []
+            terms, tfs, caps, t_off = [], [], [], [0]
+            c_terms, c_caps, c_off = [], [], [0]
+            ents, e_off = [], [0]
+            for i, (url, text) in enumerate(zip(
+                    batch.column("url").to_pylist(),
+                    batch.column("text").to_pylist())):
                 doc = parse_web_doc(url, text, stemmer=stemmer)
                 if doc is None:
                     continue
-                rows["url"].append(doc.url)
-                rows["warc_ts"].append(ts)
-                rows["doc_length"].append(doc.doc_length)
-                rows["max_tf"].append(doc.max_tf)
-                rows["unique_terms"].append(doc.unique_terms)
-                rows["terms"].append(
-                    [{"term": t, "tf": c} for t, c in doc.term_tf.items()]
-                )
-                rows["capitals"].append(
-                    [{"term": t, "cap": c} for t, c in doc.capitals.items()]
-                )
-                rows["entities"].append(sorted(doc.entities))
-            if rows["url"]:  # an all-dropped batch has no column dtypes
-                yield pd.DataFrame(rows)
+                keep.append(i)
+                urls.append(doc.url)
+                doc_length.append(doc.doc_length)
+                max_tf.append(doc.max_tf)
+                unique.append(doc.unique_terms)
+                tf, cap = doc.term_tf, doc.capitals
+                terms.extend(tf)
+                tfs.extend(tf.values())
+                caps.extend(map(cap.get, tf))
+                t_off.append(len(terms))
+                if cap.keys() - tf.keys():  # rare: keep the dict order
+                    only = [t for t in cap if t not in tf]
+                    c_terms.extend(only)
+                    c_caps.extend(map(cap.get, only))
+                c_off.append(len(c_terms))
+                ents.extend(sorted(doc.entities))
+                e_off.append(len(ents))
+            if not keep:
+                continue
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(urls, pa.string()),
+                    batch.column("warc_ts").take(pa.array(keep, pa.int32())),
+                    pa.array(doc_length, pa.int32()),
+                    pa.array(max_tf, pa.int32()),
+                    pa.array(unique, pa.int32()),
+                    lists(t_off, pa.StructArray.from_arrays(
+                        [pa.array(terms, pa.string()),
+                         pa.array(tfs, pa.int32()),
+                         pa.array(caps, pa.bool_())],
+                        names=["term", "tf", "cap"])),
+                    lists(c_off, pa.StructArray.from_arrays(
+                        [pa.array(c_terms, pa.string()),
+                         pa.array(c_caps, pa.bool_())],
+                        names=["term", "cap"])),
+                    lists(e_off, pa.array(ents, pa.string())),
+                ],
+                names=PARSED_SCHEMA.names,
+            )
 
     return fn
 
@@ -145,7 +205,7 @@ def parse_corpus(
     skew never lands on one reducer).
     """
     cfg = config or EngineConfig()
-    parsed = pages.select("url", "warc_ts", "text").mapInPandas(
+    parsed = pages.select("url", "warc_ts", "text").mapInArrow(
         _parse_batches(cfg.stemming), schema=PARSED_SCHEMA
     )
     return assign_doc_ids(parsed, cfg, slot)

@@ -42,7 +42,7 @@ def get_spark(
 
     Defaults chosen for the 100 TB design point, harmless locally:
     - AQE on (runtime coalescing + skew splitting),
-    - Arrow on (every custom stage is a pandas UDF / mapInPandas),
+    - Arrow on (every custom stage is an Arrow or pandas UDF),
     - shuffle partitions from config (at cluster scale: ~2-3x total cores).
 
     Python workers fork from ``search_engine_spark.worker_daemon`` when the

@@ -169,13 +169,19 @@ class CatalogAdapter:
         }
         self._commit(manifest, "create", name)
 
-    def read_table(self, spark: SparkSession, name: str) -> DataFrame:
+    def read_table(self, spark: SparkSession, name: str,
+                   schema=None) -> DataFrame:
+        """The committed table. A parquet table's files are read through
+        ``schema`` when given (a field a file lacks reads as null),
+        else through the schema Spark infers; an Iceberg table always has
+        its own."""
         entry = self._load()["tables"].get(name)
         if entry is None:
             raise FileNotFoundError(f"table {name} not committed in {self.root}")
         if entry.get("iceberg_ident"):
             return spark.table(entry["iceberg_ident"])
-        return spark.read.parquet(self.table_path(name))
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(self.table_path(name))
 
     # -- batch (per-partition lineage) ops ---------------------------------
     def completed_batches(self, name: str) -> list[str]:

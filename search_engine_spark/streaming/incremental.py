@@ -216,7 +216,9 @@ def compact_staging(
         config_from_properties, derive_index_tables, next_parsed_slot,
         require_parsed_docs,
     )
-    from search_engine_spark.operators.parse import assign_doc_ids
+    from search_engine_spark.operators.parse import (
+        STAGED_SCHEMA, assign_doc_ids, read_parsed,
+    )
     from search_engine_spark.sources.catalog import CatalogAdapter
 
     cat = CatalogAdapter(index_path)
@@ -247,13 +249,16 @@ def compact_staging(
         map(str, cat.completed_batches("parsed"))
     )
 
-    staged = spark.read.parquet(staging_dir)
+    # one explicit schema: staging files written before ``terms`` carried
+    # ``cap`` read it as null (their ``capitals`` hold every flag) instead
+    # of one file's footer deciding the layout of all
+    staged = spark.read.schema(STAGED_SCHEMA).parquet(staging_dir)
 
     # Doc identity is the url: ids are batch-sequential, so re-crawl dedup
-    # joins on the url itself. read_table (not a direct parquet read) so an
-    # Iceberg-routed index compacts the table it actually wrote (catalog
-    # dispatches on ident).
-    existing = cat.read_table(spark, "parsed").select("url")
+    # joins on the url itself. read_parsed goes through the catalog (not a
+    # direct parquet read) so an Iceberg-routed index compacts the table it
+    # actually wrote (catalog dispatches on ident).
+    existing = read_parsed(spark, cat).select("url")
     # latest-wins within staging: the same doc can appear twice in the
     # staging dir (foreachBatch retry re-appending after a partial write,
     # or the same url crawled twice before compaction ran)

@@ -98,7 +98,7 @@ def test_append_rejects_block_size_mismatch():
 
 
 def test_fold_batch_mixes_single_and_multi_block_lists(spark):
-    """One mapInPandas batch of the fold's kernel (index_build.splice_pairs)
+    """One mapInArrow batch of the fold's kernel (index_build.splice_pairs)
     holding single-block and multi-block old lists, partial and full last
     blocks alike: every output blob equals a from-scratch encode, and the
     rows carry exactly the postings table's columns."""
@@ -122,7 +122,7 @@ def test_fold_batch_mixes_single_and_multi_block_lists(spark):
     pairs = spark.createDataFrame(
         rows, "bucket int, term string, old_blob binary, new_blob binary",
     ).coalesce(1)
-    out = pairs.mapInPandas(
+    out = pairs.mapInArrow(
         splice_pairs(cfg), schema=POSTINGS_SCHEMA
     ).collect()
 
